@@ -75,6 +75,21 @@ def test_hyperplane_bucket_balance(clustered):
     assert max(c["count"] for c in counts) <= 0.25 * 200
 
 
+def test_hyperplane_bucket_string_and_column_forms_agree_on_struct_field(clustered):
+    """The SQL-string fast path resolves a dotted name as F.col does: a
+    struct-field reference buckets exactly like its Column form."""
+    from vmware_graph_spark.operators.similarity import hyperplane_bucket
+
+    df = clustered.select("vec_id", F.struct("embedding").alias("s"))
+    got = df.select(
+        "vec_id",
+        hyperplane_bucket("s.embedding", 16, 6).alias("a"),
+        hyperplane_bucket(F.col("s.embedding"), 16, 6).alias("b"),
+    ).collect()
+    assert len(got) == 200
+    assert all(r.a == r.b for r in got)
+
+
 def test_ivf_multiprobe_recall_improves(clustered):
     q = clustered.filter(F.col("vec_id") % 10 == 0)
     exact = cosine_topk(q, clustered, id_col="vec_id", vec_col="embedding", k=5)

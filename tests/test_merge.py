@@ -241,13 +241,12 @@ def test_salted_join_spreads_hot_key(spark):
     assert salted_join(big, small, ["k"], salts=8).count() == 100
 
 
-def test_fuse_batches_equivalent_to_sequential_merges(spark):
-    """Store-level batching: fusing consecutive same-schema update
-    batches must be BIT-identical to merging them one at a time, for
-    both MERGE…SET and ON CREATE SET, including intra-batch dup
-    resolution and cross-batch override order."""
-    from vmware_graph_spark.operators.merge import merge_nodes
-    from vmware_graph_spark.store.graph import _fuse_batches
+def test_merge_batches_same_schema_equals_sequential_merges(spark):
+    """Three same-schema batches reduced in one pass are BIT-identical
+    to merging them one at a time, for both MERGE…SET and ON CREATE
+    SET, including intra-batch dup resolution and cross-batch override
+    order."""
+    from vmware_graph_spark.operators.merge import merge_batches
 
     keys = ["k"]
     b1 = spark.createDataFrame(
@@ -260,31 +259,40 @@ def test_fuse_batches_equivalent_to_sequential_merges(spark):
     b3 = spark.createDataFrame(
         [(1, "a3", 11), (4, "d3", 41), (5, "e3", 50)], ["k", "name", "v"]
     )
+    want = {
+        False: [(1, "a3", 11), (2, "b2", 22), (3, "c1", 30), (4, "d3", 41), (5, "e3", 50)],
+        True: [(1, "a1", 10), (2, "b1", 20), (3, "c1", 30), (4, "d2", 40), (5, "e3", 50)],
+    }
     for oco in (False, True):
         pend = [(b, oco) for b in (b1, b2, b3)]
         seq = None
         for updates, flag in pend:
             seq = merge_nodes(seq, updates, keys, on_create_only=flag)
-        fused_pend = _fuse_batches(pend, keys)
-        assert len(fused_pend) == 1  # all three fuse into one
-        fused = None
-        for updates, flag in fused_pend:
-            fused = merge_nodes(fused, updates, keys, on_create_only=flag)
-        a = sorted(tuple(r) for r in seq.collect())
-        b = sorted(tuple(r) for r in fused.collect())
-        assert a == b, (oco, a, b)
+        one = merge_batches(None, pend, keys)
+        assert one.columns == seq.columns == ["k", "name", "v"]
+        assert sorted(tuple(r) for r in one.collect()) == want[oco]
+        assert sorted(tuple(r) for r in seq.collect()) == want[oco]
 
 
-def test_fuse_batches_breaks_runs_on_flag_or_schema_change(spark):
-    from vmware_graph_spark.store.graph import _fuse_batches
+def test_merge_batches_mixed_flags_and_schemas(spark):
+    """Flag and schema changes between batches: each column takes the
+    latest batch that carries it and counts for the key (an ON CREATE
+    batch counts only for keys it creates) — equal to sequential
+    merges."""
+    from vmware_graph_spark.operators.merge import merge_batches
 
-    s1 = spark.createDataFrame([(1, "x")], ["k", "name"])
-    s2 = spark.createDataFrame([(1, 9)], ["k", "v"])
-    pend = [(s1, False), (s1, False), (s1, True), (s2, True), (s1, False)]
-    fused = _fuse_batches(pend, ["k"])
-    # runs: [s1,s1]/False → 1, [s1]/True, [s2]/True, [s1]/False
-    assert len(fused) == 4
-    assert [f for _, f in fused] == [False, True, True, False]
+    s1 = spark.createDataFrame([(1, "x"), (2, "y")], ["k", "name"])
+    s1b = spark.createDataFrame([(1, "x2")], ["k", "name"])
+    s2 = spark.createDataFrame([(1, 9), (3, 7)], ["k", "v"])
+    pend = [(s1, False), (s1b, False), (s1, True), (s2, True), (s1b, False)]
+    seq = None
+    for updates, flag in pend:
+        seq = merge_nodes(seq, updates, ["k"], on_create_only=flag)
+    one = merge_batches(None, pend, ["k"])
+    want = [(1, "x2", None), (2, "y", None), (3, None, 7)]
+    assert one.columns == seq.columns == ["k", "name", "v"]
+    assert sorted(tuple(r) for r in one.collect()) == want
+    assert sorted(tuple(r) for r in seq.collect()) == want
 
 
 def test_node_key_null_propagation_and_int_rendering(spark):
@@ -336,20 +344,11 @@ def test_merge_edges_spread_identical_rows_single_exchange(spark):
     assert n_exchanges == 1, plan[:2000]
 
 
-def test_refresh_result_store_is_lazy_and_idempotent(spark):
-    """RefreshResult defers the final store's edge sweep to first
-    .store access; repeated access returns the same store and the
-    finisher runs once (second access must not re-append edge batches)."""
+def test_refresh_result_is_a_value(spark):
+    """RefreshResult is a frozen dataclass: equal fields, equal results."""
     from vmware_graph_spark.ingest.refresh import RefreshResult
     from vmware_graph_spark.store.graph import GraphStore
 
-    final = GraphStore(spark)
-    calls = []
-
-    def _finish(store):
-        calls.append(1)
-
-    res = RefreshResult(final, spark.createDataFrame([], "label string, key string"), _finish)
-    assert not calls  # construction must not run the finisher
-    assert res.store is final and calls == [1]
-    assert res.store is final and calls == [1]  # idempotent
+    s, o = GraphStore(spark), spark.createDataFrame([], "label string, key string")
+    assert RefreshResult(s, o) == RefreshResult(s, o)
+    assert RefreshResult(store=s, orphans=o).store is s

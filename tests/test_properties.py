@@ -414,14 +414,15 @@ _hostile_name = st.text(alphabet=_hostile_char, min_size=1, max_size=12).filter(
     ),
 )
 def test_merge_helpers_escape_hostile_column_names(spark, names, rows):
-    """_drop_null_keys and _dedup_one_per_key over hostile identifiers
-    behave exactly like the column-object logic run on a sanitized-name
-    TWIN of the same data (the twin never parses a hostile name, so it
-    is a pure-semantics reference)."""
+    """_drop_null_keys, _dedup_one_per_key and merge_batches over hostile
+    identifiers behave exactly like the same logic run on a
+    sanitized-name TWIN of the same data (the twin never parses a
+    hostile name, so it is a pure-semantics reference)."""
     from vmware_graph_spark.operators.merge import (
         _PICK,
         _dedup_one_per_key,
         _drop_null_keys,
+        merge_batches,
     )
 
     key, vals = names[0], names[1:]
@@ -454,6 +455,21 @@ def test_merge_helpers_escape_hostile_column_names(spark, names, rows):
         .collect()
     )
     assert got2 == want2
+
+    # existing + a SET batch carrying only the first value column, with
+    # its values shifted, + an ON CREATE batch of the full schema
+    part = [(a, None if b is None else b + 1) for a, b in rows]
+    got3 = _nsort(
+        merge_batches(
+            df, [(spark.createDataFrame(part, StructType(schema[:2])), False), (df, True)], [key]
+        ).collect()
+    )
+    want3 = _nsort(
+        merge_batches(
+            safe, [(spark.createDataFrame(part, "k int, v0 int"), False), (safe, True)], ["k"]
+        ).collect()
+    )
+    assert got3 == want3
 
 
 @PROP
@@ -603,3 +619,93 @@ def test_write_xlsx_parse_xlsx_roundtrip(tmp_path_factory, header, rows):
     assert len(got_rows) == len(rows)
     for exp, got in zip(rows, got_rows):
         assert got == [None if v is None else str(v) for v in exp]
+
+
+_VALUE_TYPES = {"a": "int", "b": "string", "c": "int"}
+_VALUES = {
+    "a": st.one_of(st.none(), st.integers(0, 2)),
+    "b": st.one_of(st.none(), st.sampled_from(["x", "y", "z"])),
+    "c": st.one_of(st.none(), st.integers(-1, 1)),
+}
+
+
+@st.composite
+def _merge_batch(draw, keys):
+    """One (columns, rows, on_create_only) batch: a random subset of the
+    value columns, all columns in a random order, null and duplicate
+    keys."""
+    vals = draw(st.lists(st.sampled_from(sorted(_VALUE_TYPES)), unique=True, max_size=3))
+    cols = draw(st.permutations(list(keys) + vals))
+    cell = {k: st.one_of(st.none(), st.integers(0, 3)) for k in keys} | _VALUES
+    rows = draw(st.lists(st.tuples(*[cell[c] for c in cols]), max_size=6))
+    return cols, rows, draw(st.booleans())
+
+
+def _sequential_merge_model(batches, keys):
+    """Pure-Python sequential Cypher MERGE: null-keyed rows are dropped;
+    a batch's duplicates resolve to the row that sorts first on its own
+    value columns, in its column order, ASC NULLS LAST; SET overwrites
+    every carried property, ON CREATE SET only writes keys it creates."""
+    state: dict[tuple, dict] = {}
+    for cols, rows, oco in batches:
+        vals = [c for c in cols if c not in keys]
+        best: dict[tuple, tuple] = {}
+        for r in rows:
+            d = dict(zip(cols, r))
+            k = tuple(d[c] for c in keys)
+            if None in k:
+                continue
+            rank = tuple((d[c] is None, d[c] if d[c] is not None else 0) for c in vals)
+            if k not in best or rank < best[k][0]:
+                best[k] = (rank, d)
+        for k, (_, d) in best.items():
+            if k not in state:
+                state[k] = {c: d[c] for c in vals}
+            elif not oco:
+                state[k].update({c: d[c] for c in vals})
+    return state
+
+
+@PROP
+@given(st.data())
+def test_merge_batches_equals_sequential_merge_model(spark, data):
+    """merge_batches over random mixed-schema batch lists (both flags,
+    null keys, duplicate keys within a batch, columns only some batches
+    carry, with and without an existing table) equals sequential Cypher
+    MERGE, with keys leading the output unless one batch schema stands
+    alone."""
+    from vmware_graph_spark.operators.merge import merge_batches
+
+    keys = data.draw(st.sampled_from([("k",), ("k", "m")]))
+    batches = data.draw(st.lists(_merge_batch(keys), min_size=1, max_size=4))
+    with_existing = data.draw(st.booleans())
+    if with_existing:
+        batches[0] = (*batches[0][:2], False)  # existing merges as SET
+    key_type = {k: "int" for k in keys}
+    dfs = [
+        (
+            spark.createDataFrame(
+                rows, ", ".join(f"{c} {(key_type | _VALUE_TYPES)[c]}" for c in cols)
+            ),
+            oco,
+        )
+        for cols, rows, oco in batches
+    ]
+    if with_existing:
+        out = merge_batches(dfs[0][0], dfs[1:], list(keys))
+    else:
+        out = merge_batches(None, dfs, list(keys))
+
+    model = _sequential_merge_model(batches, keys)
+    value_cols: list[str] = []
+    for cols, _, _ in batches:
+        value_cols += [c for c in cols if c not in keys and c not in value_cols]
+    alike = len({(frozenset(c), o) for c, _, o in batches}) == 1
+    alone = len(batches) == 1 or (alike and not with_existing)
+    assert out.columns == (batches[0][0] if alone else [*keys, *value_cols])
+    got = _nsort(out.collect())
+    want = _nsort(
+        tuple({**dict(zip(keys, k)), **v}.get(c) for c in out.columns)
+        for k, v in model.items()
+    )
+    assert got == want

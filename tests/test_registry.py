@@ -118,3 +118,15 @@ def test_cli_query_and_list_subcommands(capsys):
     assert main(["query"]) == 2
     assert main(["query", "q1_pricing_summary", "sf", "extra"]) == 2
     assert main(["query", "q1_pricing_summary", "--limit", "nope"]) == 2
+
+
+def test_tune_sets_only_runtime_modifiable_confs(spark):
+    """session.tune() sets every key with no error guard, so each one
+    must be settable on a live session."""
+    from vmware_graph_spark.session import ENGINE_CONF, tune
+
+    keys = [*ENGINE_CONF, "spark.sql.shuffle.partitions"]
+    assert all(spark.conf.isModifiable(k) for k in keys), [
+        k for k in keys if not spark.conf.isModifiable(k)
+    ]
+    assert tune(spark) is spark

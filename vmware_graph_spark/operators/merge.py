@@ -5,10 +5,11 @@ key, SURVEY §2.4) and ~110 relationship MERGEs, many in the *undirected*
 form ``(a)-[:T]-(b)`` which matches either direction. Re-expressed for
 Spark's immutable, snapshot-oriented model:
 
-- node MERGE  → deterministic last-writer-wins dedup on the key columns
-  (window + row_number, never bare dropDuplicates — SURVEY "hard parts").
-- MERGE…SET   → updates overwrite matched rows (new source wins).
-- MERGE…ON CREATE SET → existing rows win; source only fills gaps.
+- node MERGE  → ``merge_batches``: the existing table and any number of
+  update batches reduced in one keyed pass, deterministic on duplicates
+  (never bare dropDuplicates — SURVEY "hard parts").
+- MERGE…SET   → a batch overwrites the properties it carries.
+- MERGE…ON CREATE SET → a batch counts only for the keys it creates.
 - rel MERGE   → append + distinct on (src, rel_type, dst), with
   undirected types canonicalized by sorted endpoint pair so the same
   edge asserted in both directions dedups to one row.
@@ -22,10 +23,11 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 _PICK = "__merge_pick"
+_ORD = "__merge_ord"
 
 
 def _bt(name: str) -> str:
@@ -59,98 +61,92 @@ def _dedup_one_per_key(df: DataFrame, keys: Sequence[str]) -> DataFrame:
     return df.withColumn(_PICK, rn).filter(F.col(_PICK) == 1).drop(_PICK)
 
 
+def merge_batches(
+    existing: DataFrame | None,
+    batches: Sequence[tuple[DataFrame, bool]],
+    keys: Sequence[str],
+) -> DataFrame:
+    """Node MERGE of ``existing`` and any number of ``(updates,
+    on_create_only)`` batches, applied in order, in ONE keyed pass.
+
+    ``on_create_only=False`` → MERGE … SET (refresh-vmware.cypher:35,
+    39-40): for a matched key, every property the batch *carries* (every
+    column of its schema) is overwritten — including with null, matching
+    Cypher ``SET n.x = null`` — while properties the batch does not carry
+    keep their values (earlier stages' writes on the same node survive).
+
+    ``on_create_only=True`` → MERGE … ON CREATE SET (cypher:284-287): the
+    batch counts only for keys it creates; matched keys keep every
+    property.
+
+    Shape (Pregelix's state update: one group-by over a tagged union of
+    the old state and the incoming batches): every source is tagged with
+    its position, ``existing`` first. One window on the key orders each
+    key's rows by position, then by the source's own value columns ASC
+    NULLS LAST — so duplicates inside a batch resolve exactly as
+    ``_dedup_one_per_key`` resolves them — and keeps each source's first
+    row. One aggregate on the same key then takes, per column, the value
+    of the latest source that carries the column and counts for the key.
+    Both hash on the key, so the whole merge is one exchange.
+    """
+    sources = ([(existing, False)] if existing is not None else []) + list(batches)
+    if len(sources) == 1:
+        return _dedup_one_per_key(_drop_null_keys(sources[0][0], keys), keys)
+    keys = list(keys)
+    cols: list[str] = []  # value columns in order of first appearance
+    ties: list[str] = []  # one tie-order struct per source with values
+    both = None
+    for i, (df, _) in enumerate(sources):
+        vals = [c for c in df.columns if c not in keys]
+        cols += [c for c in vals if c not in cols]
+        # (IS NULL, value) pairs sort each column ASC NULLS LAST; the
+        # other sources' structs are null on this source's rows
+        fields = ", ".join(
+            f"'n{j}', {_bt(c)} IS NULL, 'v{j}', {_bt(c)}" for j, c in enumerate(vals)
+        )
+        extra = [f"named_struct({fields}) AS __merge_tie{i}"] if vals else []
+        ties += [f"__merge_tie{i}"] if vals else []
+        df = _drop_null_keys(df, keys).selectExpr("*", f"{i} AS {_ORD}", *extra)
+        both = df if both is None else both.unionByName(df, allowMissingColumns=True)
+    # output order: a lone batch schema (all sources alike, no existing)
+    # keeps its own column order; otherwise keys lead
+    alike = existing is None and len({(frozenset(d.columns), o) for d, o in batches}) == 1
+    out = [_bt(c) for c in (batches[0][0].columns if alike else keys + cols)]
+    if not cols:
+        return both.selectExpr(*out).distinct()
+    part = ", ".join(_bt(k) for k in keys)
+    w = f"OVER (PARTITION BY {part} ORDER BY {', '.join([_ORD, *ties])})"
+    heads = both.selectExpr(
+        "*",
+        f"NOT (lag({_ORD}) {w} <=> {_ORD}) AS __merge_head",
+        f"first_value({_ORD}) {w} AS __merge_first",
+    ).filter("__merge_head")
+
+    def counts(c: str) -> str:  # does this row's source set c for its key?
+        on = [(i, oco) for i, (df, oco) in enumerate(sources) if c in df.columns]
+        sets = ", ".join(str(i) for i, oco in on if not oco) or "-1"
+        creates = ", ".join(str(i) for i, oco in on if oco) or "-1"
+        return f"{_ORD} IN ({sets}) OR ({_ORD} IN ({creates}) AND {_ORD} = __merge_first)"
+
+    merged = heads.groupBy(*[F.col(_bt(k)) for k in keys]).agg(
+        *[
+            F.expr(f"max_by({_bt(c)}, CASE WHEN {counts(c)} THEN {_ORD} END) AS {_bt(c)}")
+            for c in cols
+        ]
+    )
+    return merged.selectExpr(*out)
+
+
 def upsert_last_writer_wins(
     existing: DataFrame | None,
     updates: DataFrame,
     keys: Sequence[str],
     *,
     updates_win: bool = True,
-    assume_unique_existing: bool = False,
 ) -> DataFrame:
-    """Core upsert: one row per key, per-COLUMN merge semantics.
-
-    ``updates_win=True``  → MERGE … SET   (refresh-vmware.cypher:35,39-40):
-    for a matched key, every property the update batch *carries* (i.e.
-    every column in ``updates``'s schema) is overwritten — including
-    with null, matching Cypher ``SET n.x = null`` property removal —
-    while properties only present on the existing row are preserved
-    (earlier ingest stages' writes on the same node survive).
-
-    ``updates_win=False`` → MERGE … ON CREATE SET
-    (refresh-vmware.cypher:284-287): matched keys keep ALL existing
-    properties; only brand-new keys take the update values.
-
-    Shape: when the two schemas carry the SAME column set, per-column
-    merge degenerates to whole-row pick and the whole upsert fuses into
-    ONE union + window shuffle (the winner-preference tag leads the
-    ordering, the deterministic value-column order breaks intra-batch
-    ties exactly as ``_dedup_one_per_key`` would). Differing schemas
-    take the general path: one window dedup per non-unique input + one
-    full-outer hash join on the key. ``assume_unique_existing=True``
-    (safe for merge outputs being re-merged, e.g. GraphStore chains)
-    skips re-deduplicating ``existing`` there — one less shuffle and a
-    much shallower plan across a 15-stage ingest.
-    """
-    updates = _drop_null_keys(updates, keys)
-    if existing is None:
-        return _dedup_one_per_key(updates, keys)
-    if set(updates.columns) == set(existing.columns):
-        # one union + one window, both as SQL strings — this helper
-        # runs twice per label per refresh, and the per-value-column
-        # Column-object order chain was a top remaining
-        # plan-construction cost (round-8 profile: refresh() compose
-        # held ~29k py4j roundtrips, mostly here)
-        both = updates.selectExpr("*", "1 AS __from_updates").unionByName(
-            _drop_null_keys(existing, keys).selectExpr("*", "0 AS __from_updates")
-        )
-        value_cols = [c for c in existing.columns if c not in keys]
-        part = ", ".join(_bt(k) for k in keys)
-        pref = "__from_updates " + ("DESC" if updates_win else "ASC")
-        order = ", ".join(
-            [pref] + [f"{_bt(c)} ASC NULLS LAST" for c in value_cols]
-        )
-        rn = F.expr(f"row_number() OVER (PARTITION BY {part} ORDER BY {order})")
-        return (
-            both.withColumn(_PICK, rn)
-            .filter(f"{_bt(_PICK)} = 1")
-            .selectExpr(*[_bt(c) for c in (*keys, *value_cols)])
-        )
-    updates = _dedup_one_per_key(updates, keys)
-    existing = _drop_null_keys(existing, keys)
-    if not assume_unique_existing:
-        existing = _dedup_one_per_key(existing, keys)
-
-    u_cols = [c for c in updates.columns if c not in keys]
-    e_cols = [c for c in existing.columns if c not in keys]
-    u = updates.selectExpr("*", "true AS __u_present").alias("u")
-    e = existing.selectExpr("*", "true AS __e_present").alias("e")
-    joined = e.join(u, on=list(keys), how="full_outer")
-
-    # ONE selectExpr: per-column CASEs as SQL text. Qualified refs are
-    # backtick-escaped (`u`.`col`) — the former f"u.{c}" Column lookup
-    # mis-parsed column names containing dots.
-    u_matched = "u.`__u_present` IS NOT NULL"
-    e_matched = "e.`__e_present` IS NOT NULL"
-    out: list[str] = [_bt(k) for k in keys]
-    for c in e_cols + [c for c in u_cols if c not in e_cols]:
-        in_u, in_e = c in u_cols, c in e_cols
-        qu, qe = f"u.{_bt(c)}", f"e.{_bt(c)}"
-        if updates_win:
-            if in_u and in_e:
-                expr = f"CASE WHEN {u_matched} THEN {qu} ELSE {qe} END"
-            elif in_u:
-                expr = qu
-            else:
-                expr = qe
-        else:
-            if in_u and in_e:
-                expr = f"CASE WHEN {e_matched} THEN {qe} ELSE {qu} END"
-            elif in_e:
-                expr = qe
-            else:
-                expr = f"CASE WHEN {e_matched} THEN NULL ELSE {qu} END"
-        out.append(f"{expr} AS {_bt(c)}")
-    return joined.selectExpr(*out)
+    """One-batch :func:`merge_batches`: ``updates_win=True`` is MERGE …
+    SET, ``False`` is MERGE … ON CREATE SET."""
+    return merge_batches(existing, [(updates, not updates_win)], keys)
 
 
 def merge_nodes(
@@ -159,16 +155,9 @@ def merge_nodes(
     keys: Sequence[str],
     *,
     on_create_only: bool = False,
-    assume_unique_existing: bool = False,
 ) -> DataFrame:
-    """Node MERGE (M1-M3, SURVEY §2.4)."""
-    return upsert_last_writer_wins(
-        existing,
-        updates,
-        keys,
-        updates_win=not on_create_only,
-        assume_unique_existing=assume_unique_existing,
-    )
+    """Node MERGE (M1-M3, SURVEY §2.4): one-batch :func:`merge_batches`."""
+    return merge_batches(existing, [(updates, on_create_only)], keys)
 
 
 # Relationship types the reference merges with the undirected pattern

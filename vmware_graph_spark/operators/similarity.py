@@ -440,7 +440,10 @@ def hyperplane_bucket(vec_col, dim: int, planes: int = 8, seed: int = 7):
         # ~0.5 s of driver time per call — and the NN-Descent paths
         # call this once per view). Identical Catalyst expressions:
         # aggregate(zip_with(...)) is exactly functions.vector.dot.
-        v = f"cast(`{vec_col.replace('`', '``')}` AS array<double>)"
+        # The name resolves as F.col resolves it: dots separate parts
+        # (struct fields) unless the caller backtick-quoted them.
+        ref = vec_col if "`" in vec_col else ".".join(f"`{p}`" for p in vec_col.split("."))
+        v = f"cast({ref} AS array<double>)"
         bits = []
         for row in hp:
             arr = "array(" + ",".join(f"{x!r}D" for x in row) + ")"

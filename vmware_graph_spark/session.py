@@ -88,8 +88,5 @@ def tune(spark: SparkSession) -> SparkSession:
     conf = dict(ENGINE_CONF)
     conf["spark.sql.shuffle.partitions"] = shuffle_partitions()
     for k, v in conf.items():
-        try:
-            spark.conf.set(k, v)
-        except Exception:
-            pass  # static conf on a live session — keep going
+        spark.conf.set(k, v)  # every key is runtime-settable; failures surface
     return spark

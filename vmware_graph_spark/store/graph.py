@@ -31,9 +31,9 @@ from pyspark.sql import functions as F
 from vmware_graph_spark.operators.merge import (
     EDGE_COLS,
     PROPS_COL,
+    merge_batches,
     merge_edges,
     merge_edges_with_props,
-    merge_nodes,
 )
 
 # Unit separator joins composite natural keys into the edge-table key.
@@ -136,107 +136,41 @@ def node_key(*cols) -> F.Column:
     return F.concat(*parts)
 
 
-def _fuse_batches(
-    pend: Sequence[tuple[DataFrame, bool]], keys: Sequence[str]
-) -> list[tuple[DataFrame, bool]]:
-    """Fuse CONSECUTIVE same-schema, same-flag update batches into one.
-
-    Sequential same-schema MERGEs are whole-row per key, so k batches
-    collapse to one union tagged with batch order: the window picks the
-    LATEST batch's winner for MERGE…SET (earliest for ON CREATE SET),
-    with the usual deterministic value ordering breaking intra-batch
-    ties — bit-identical to merging the batches one by one, at one
-    shuffle instead of k. (The vInfo Network #1-4 fan-out alone issues
-    4 identical-schema Vportgroup upserts; dimension labels collect a
-    dozen across a refresh.)
-    """
-    from vmware_graph_spark.operators.merge import _bt
-
-    runs: list[list[tuple[DataFrame, bool]]] = []
-    sig = None
-    for updates, oco in pend:
-        s = (tuple(sorted(updates.columns)), oco)
-        if sig == s:
-            runs[-1].append((updates, oco))
-        else:
-            runs.append([(updates, oco)])
-            sig = s
-    out: list[tuple[DataFrame, bool]] = []
-    for run in runs:
-        if len(run) == 1:
-            out.append(run[0])
-            continue
-        oco = run[0][1]
-        tag = "__batch_ord"
-        both = run[0][0].withColumn(tag, F.lit(0))
-        for i, (df, _) in enumerate(run[1:], start=1):
-            both = both.unionByName(df.withColumn(tag, F.lit(i)))
-        value_cols = [c for c in run[0][0].columns if c not in keys]
-        part = ", ".join(_bt(k) for k in keys)
-        order = ", ".join(
-            [f"{_bt(tag)} {'ASC' if oco else 'DESC'}"]
-            + [f"{_bt(c)} ASC NULLS LAST" for c in value_cols]
-        )
-        fused = (
-            both.withColumn(
-                "__fuse_pick",
-                F.expr(f"row_number() OVER (PARTITION BY {part} ORDER BY {order})"),
-            )
-            .filter(F.col("__fuse_pick") == 1)
-            .select(*run[0][0].columns)
-        )
-        out.append((fused, oco))
-    return out
-
-
 class GraphStore:
-    """In-memory (lazy DataFrame) snapshot of the property graph.
+    """In-memory (DataFrame) snapshot of the property graph.
 
     Ingest stages call ``upsert_nodes``/``add_edges``; the store keeps
     one DataFrame per label plus a list of edge batches that
-    ``edges()`` merges/canonicalizes on demand. Everything is lazy —
-    a refresh builds one big DAG and materializes at write time.
+    ``edges()`` merges/canonicalizes on demand. Upserts queue per label
+    and merge at the label's first read-back; each merged table is a
+    lineage cut (see ``checkpoint``).
     """
 
-    def __init__(
-        self, spark: SparkSession, *, checkpoint: bool = True, checkpoint_every: int = 1
-    ):
+    def __init__(self, spark: SparkSession, *, checkpoint: bool = True):
+        """``checkpoint=True`` cuts the lineage (``localCheckpoint``) of
+        each merged label table and edge table. Without the cuts the
+        plan for a label after stage N embeds every prior stage, and
+        the cut tables are shared subtrees of later stages' plans. Under
+        AQE a cut runs its upstream shuffle stages when it is taken, so
+        ``checkpoint=False`` moves that work to write time but repeats
+        it per consumer: on a 7-sheet refresh (4 shared cores) it cut
+        refresh build jobs from 118 to 2 but raised publish jobs from
+        100 to 357 and executor time from 47.6 to 100.6 s, and wall time
+        did not improve. Isolated one- or two-stage runs (the registry's
+        ``ingest_*_stage`` queries) have few shared subtrees and run
+        fastest uncut: cutting them added 0-2.4 s per query."""
         self.spark = spark
         self._vertices: dict[str, DataFrame] = {}
-        # label → [(updates, on_create_only)] not yet merged: upserts
-        # accumulate and the whole per-label chain is composed + cut
-        # ONCE at the first read-back (vertices/write/counts), not per
-        # call. A full 2-pass refresh issues ~247 upserts but only ~45
-        # label read-backs, and each skipped cut skips a full
-        # driver-side physical planning of the chain so far (the
-        # localCheckpoint .rdd conversion) — the round-2 VERDICT's
-        # "ingest is driver-planning-bound" fix. Measured at sf0.01:
-        # full refresh 172 s → see SCALING.md (ingest plan-depth row).
+        # label → [(updates, on_create_only)] not yet merged: the whole
+        # queue merges in one pass (merge_batches) and is cut ONCE at
+        # the label's first read-back (vertices/write/counts), not per
+        # upsert. A full refresh issues ~247 upserts but only ~45 label
+        # read-backs.
         self._pending: dict[str, list[tuple[DataFrame, bool]]] = {}
         self._edge_batches: list[DataFrame] = []
         self._edges_cache: DataFrame | None = None
         self._edges_props_cache: DataFrame | None = None
-        # Upserts compose: without lineage truncation the plan for label
-        # L after stage N embeds every prior stage's joins, and Catalyst
-        # analysis cost grows super-linearly (a 15-stage ingest never
-        # finishes analyzing). localCheckpoint (eager=False — defers
-        # computation, so the refresh stays one job chain) is the
-        # single-JVM analog of persisting stage outputs; on a cluster
-        # the snapshot writer (``write``) plays the same role.
-        #
-        # The cut itself is not free: the .rdd conversion inside
-        # localCheckpoint runs full physical planning of the chain so
-        # far (~95% of a measured single-stage ingest was driver-side
-        # planning, not execution). ``checkpoint_every`` trades cut
-        # frequency against plan depth: >1 skips cuts until a label has
-        # accumulated that many upserts. Measured on the full 2-pass
-        # 12-sheet refresh at sf0.01, every=1 wins (172 s vs 178 s at 2,
-        # 211 s at 4 — deeper uncut chains make every *subsequent*
-        # analysis pass costlier), while isolated single-stage runs
-        # prefer 4 by ~15%. Default 1; raise only for few-stage flows.
         self._checkpoint = checkpoint
-        self._every = max(1, checkpoint_every)
-        self._since_cut: dict[str, int] = {}
         # Lazy cuts handed to CALLERS (edge_pairs) get embedded in
         # multiple downstream plans — several label chains plus the
         # edge union. write()'s concurrent fan-out materializes those
@@ -246,16 +180,8 @@ class GraphStore:
         # write() can materialize each one ONCE, serially, pre-fan-out.
         self._shared_cuts: list[DataFrame] = []
 
-    def _cut(self, df: DataFrame, label: str | None = None) -> DataFrame:
-        if not self._checkpoint:
-            return df
-        if label is not None:
-            n = self._since_cut.get(label, 0) + 1
-            if n < self._every:
-                self._since_cut[label] = n
-                return df
-            self._since_cut[label] = 0
-        return df.localCheckpoint(eager=False)
+    def _cut(self, df: DataFrame) -> DataFrame:
+        return df.localCheckpoint(eager=False) if self._checkpoint else df
 
     # -- vertices ----------------------------------------------------------
 
@@ -264,29 +190,15 @@ class GraphStore:
     ) -> None:
         """MERGE ``updates`` into the label table (M1-M3 semantics).
 
-        Lazy: the update is queued; the per-label merge chain composes
-        and truncates lineage at the first read-back (``vertices``,
-        ``write``, ``counts``…). Merge ORDER is preserved exactly —
-        only the plan-cut frequency changes."""
+        The update is queued; the label's queue merges in order at its
+        first read-back (``vertices``, ``write``, ``counts``…)."""
         self._pending.setdefault(label, []).append((updates, on_create_only))
 
     def _flush(self, label: str) -> None:
         pend = self._pending.pop(label, None)
-        if not pend:
-            return
-        keys = LABEL_KEYS[label]
-        cur = self._vertices.get(label)
-        for updates, on_create_only in _fuse_batches(pend, keys):
-            # existing is always this store's previous merge output →
-            # already one row per key; skip the defensive re-dedup.
-            cur = merge_nodes(
-                cur,
-                updates,
-                keys,
-                on_create_only=on_create_only,
-                assume_unique_existing=cur is not None,
-            )
-        self._vertices[label] = self._cut(cur, label)
+        if pend:
+            merged = merge_batches(self._vertices.get(label), pend, LABEL_KEYS[label])
+            self._vertices[label] = self._cut(merged)
 
     def vertices(self, label: str) -> DataFrame | None:
         self._flush(label)
