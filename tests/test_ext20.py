@@ -388,6 +388,15 @@ def test_weighted_sssp_prefers_cheap_detour_and_raises_on_neg_cycle(spark):
         weighted_sssp(neg, src, max_iters=10)
 
 
+def test_weighted_sssp_repeated_source_row_counts_once(spark):
+    from vmware_graph_spark.analytics.algos import weighted_sssp
+
+    edges = spark.createDataFrame([("a", "b", 2)], "src string, dst string, w int")
+    src = spark.createDataFrame([("a", "a"), ("a", "a")], "id string, landmark string")
+    got = sorted(map(tuple, weighted_sssp(edges, src).collect()))
+    assert got == [("a", "a", 0), ("b", "a", 2)]
+
+
 def test_crash_retried_index_tolerated_and_compacted(spark, tmp_path):
     """A crash-retried extend leaves duplicated rows in the index
     tables; decisions must be unaffected (fingerprints distinct-ed,

@@ -709,3 +709,119 @@ def test_merge_batches_equals_sequential_merge_model(spark, data):
         for k, v in model.items()
     )
     assert got == want
+
+
+def _graph_references(ids, edges, weighted, sources, landmarks):
+    """Pure-Python (networkx) answers for the graph-analytics property."""
+    import networkx as nx
+
+    und = nx.Graph()
+    und.add_nodes_from(ids)
+    und.add_edges_from(edges)
+    comp = {v: min(c) for c in nx.connected_components(und) for v in c}
+
+    simple = nx.Graph((u, v) for u, v in edges if u != v)
+    core = nx.k_core(simple, 2)
+    k_core = {(v, d) for v, d in core.degree()}
+
+    dg = nx.DiGraph()
+    dg.add_nodes_from(ids)
+    dg.add_edges_from(edges)
+    hops = dict(nx.all_pairs_shortest_path_length(dg))
+    closure = {(s, t, d) for s in ids for t, d in hops[s].items() if t != s}
+    for s in ids:  # s reaches itself through its shortest cycle
+        back = [1 + hops[u][s] for u in dg.successors(s) if s in hops[u]]
+        if back:
+            closure.add((s, s, min(back)))
+
+    wg = nx.DiGraph()
+    wg.add_nodes_from(ids)
+    for u, v, w in weighted:
+        if not wg.has_edge(u, v) or wg[u][v]["weight"] > w:
+            wg.add_edge(u, v, weight=w)
+    sssp = set()
+    for lm in {lm for _, lm in sources}:
+        starts = {i for i, l2 in sources if l2 == lm}
+        for v, d in nx.multi_source_dijkstra_path_length(wg, starts).items():
+            sssp.add((v, lm, d))
+
+    bfs: dict = {}
+    for s in {i for i, _ in sources}:
+        for v, d in hops[s].items():
+            if d <= 10:
+                bfs[v] = min(d, bfs.get(v, d))
+    paths = {
+        (v, lm, d) for lm in set(landmarks) for v, d in hops[lm].items() if d <= 10
+    }
+    return comp, k_core, closure, sssp, set(bfs.items()), paths
+
+
+@st.composite
+def _random_graph(draw, tag):
+    """One random graph: ≤12 vertices ``<tag><i>``, ≤25 edges — random
+    edges (self-loops and parallel edges included) within a random
+    dense part, and a random path that starts there and runs out of it,
+    for long diameters and peel cascades — plus weights, (id, landmark)
+    sources with repeats, and landmarks."""
+    n = draw(st.integers(1, 12))
+    ids = [f"{tag}{i}" for i in range(n)]
+    vid = st.sampled_from(ids)
+    order = draw(st.permutations(ids))
+    dense = st.sampled_from(order[: draw(st.integers(1, n))])
+    hops = draw(st.integers(0, n - 1))
+    edges = list(zip(order[:hops], order[1 : hops + 1]))
+    edges += draw(st.lists(st.tuples(dense, dense), max_size=25 - hops))
+    weights = draw(st.lists(st.integers(1, 5), min_size=len(edges), max_size=len(edges)))
+    sources = draw(
+        st.lists(st.tuples(vid, st.sampled_from(["L1", "L2"])), min_size=1, max_size=4)
+    )
+    landmarks = draw(st.lists(vid, min_size=1, max_size=3))
+    return ids, edges, [(u, v, w) for (u, v), w in zip(edges, weights)], sources, landmarks
+
+
+@settings(max_examples=3, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+@given(st.tuples(*(_random_graph(tag) for tag in "abcd")))
+def test_graph_loops_match_networkx(spark, graphs):
+    """The superstep and frontier loops equal pure-Python references on
+    a batch of random graphs (one disjoint union per example), at 1 and
+    at 5 shuffle partitions."""
+    from vmware_graph_spark.analytics.algos import (
+        connected_components,
+        connected_components_star,
+        k_core,
+        transitive_closure,
+        weighted_sssp,
+    )
+    from vmware_graph_spark.analytics.motif import bfs_distances, shortest_paths
+
+    ids, edges, weighted, sources, landmarks = (sum(part, []) for part in zip(*graphs))
+    comp, core, closure, sssp, bfs, paths = _graph_references(
+        ids, edges, weighted, sources, landmarks
+    )
+
+    v_df = spark.createDataFrame([(i,) for i in ids], "id string")
+    e_df = spark.createDataFrame(edges, "src string, dst string")
+    w_df = spark.createDataFrame(weighted, "src string, dst string, w int")
+    s_df = spark.createDataFrame(sources, "id string, landmark string")
+    l_df = spark.createDataFrame([(i,) for i in landmarks], "id string")
+
+    def rows(df):  # a list, so duplicate rows show
+        return sorted(map(tuple, df.collect()))
+
+    conf = "spark.sql.shuffle.partitions"
+    saved = spark.conf.get(conf)
+    try:
+        for parts in ("1", "5"):
+            spark.conf.set(conf, parts)
+            assert rows(connected_components(v_df, e_df)) == sorted(comp.items())
+            for finish in (0, 100_000):
+                star = connected_components_star(v_df, e_df, local_finish_edges=finish)
+                assert rows(star) == sorted(comp.items())
+            assert rows(k_core(e_df, 2)) == sorted(core)
+            assert rows(transitive_closure(e_df)) == sorted(closure)
+            assert rows(weighted_sssp(w_df, s_df)) == sorted(sssp)
+            assert rows(bfs_distances(v_df, e_df, s_df)) == sorted(bfs)
+            assert rows(shortest_paths(v_df, e_df, l_df)) == sorted(paths)
+    finally:
+        spark.conf.set(conf, saved)

@@ -301,6 +301,46 @@ def test_personalized_pagerank_mass_stays_near_seeds(spark):
     assert r["a"] > r["b"] > 0  # seed keeps the restart mass advantage
 
 
+def test_personalized_pagerank_counts_each_seed_vertex_once(spark):
+    """Teleport mass is split over the distinct seed ids that are
+    vertices: a repeated seed row or an unknown seed id changes
+    nothing, and a seed set with no vertex in it raises."""
+    from vmware_graph_spark.analytics.algos import personalized_pagerank_fixed
+
+    vertices = spark.createDataFrame([(x,) for x in "abcd"], ["id"])
+    edges = spark.createDataFrame(
+        [("a", "b"), ("b", "c"), ("b", "a"), ("c", "d")], ["src", "dst"]
+    )  # d dangling
+
+    def run(ids):
+        seeds = spark.createDataFrame([(x,) for x in ids], ["id"])
+        return sorted(
+            map(tuple, personalized_pagerank_fixed(vertices, edges, seeds, iters=5).collect())
+        )
+
+    want = run(["a", "c"])
+    assert run(["a", "c", "a"]) == want
+    assert run(["a", "c", "zz"]) == want
+    with pytest.raises(ValueError, match="seed"):
+        run(["zz"])
+
+
+def test_no_lineage_cut_outside_pin():
+    """Every lineage cut in the package goes through ``pin.cut``, so
+    moving to a reliable checkpoint is a one-function change."""
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent / "vmware_graph_spark"
+    hits = [
+        f"{path.relative_to(root)}:{n}"
+        for path in sorted(root.rglob("*.py"))
+        if path.relative_to(root).as_posix() != "operators/pin.py"
+        for n, line in enumerate(path.read_text().splitlines(), 1)
+        if ".localCheckpoint(" in line
+    ]
+    assert hits == []
+
+
 def test_transitive_closure_doubling_and_convergence_guard(spark):
     import pytest as _pytest
 

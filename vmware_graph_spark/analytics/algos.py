@@ -9,13 +9,14 @@ handles sizing.
 Inputs: vertices(id: string), edges(src: string, dst: string).
 Edges are treated as undirected for CC/degrees; PageRank is directed.
 
-Scale notes: each iteration is one shuffle on vertex id. Lineage is cut
-with localCheckpoint per iteration (on a cluster: reliable checkpoint
-dir) — without it the plan doubles every round. Convergence uses a
-count of changed labels, which AQE executes as a cheap partial agg.
-For web-scale graphs swap the label-propagation loop for the
-large-star/small-star algorithm (Kiveris et al., "Connected Components
-in MapReduce and Beyond") — same DataFrame skeleton, fewer rounds.
+Iterative algorithms run on one superstep loop, :func:`_supersteps`
+(BFS and shortest paths on its frontier twin in ``motif``): a round is
+one templated SQL statement — vertex state joined with the aggregated
+messages, Pregelix's dataflow — followed by one lineage cut
+(``operators.pin.cut``, which also carries the local-vs-reliable
+checkpoint note); without the cut the plan doubles every round.
+Convergence probes are counts over the round's output, which AQE runs
+as a cheap partial aggregate.
 """
 
 from __future__ import annotations
@@ -25,6 +26,8 @@ import math
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from vmware_graph_spark.operators.pin import cut
 
 
 def degrees(edges: DataFrame) -> DataFrame:
@@ -84,6 +87,55 @@ def _sym(edges: DataFrame) -> DataFrame:
     ).select("e.src", "e.dst")
 
 
+def _parts(df: DataFrame) -> int:
+    return int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+
+
+def _supersteps(name, state, step, *, rounds, probe=None, carry=None, **tables):
+    """Run up to ``rounds`` supersteps from ``state``; return the last state.
+
+    ``step`` is a templated SQL statement over ``{state}`` and the named
+    ``tables`` (or a function of the state); each round runs it once
+    and cuts its output once. Without ``probe`` the loop runs exactly
+    ``rounds`` rounds and cuts eagerly. With ``probe(old, new) -> bool``
+    the cut is lazy and the probe's action materialises it (a full
+    count computes every partition, so no block is left behind); the
+    loop stops at the first round the probe reports converged, and
+    raises ``RuntimeError`` if none does — a silent partial result
+    would be wrong. ``carry`` names the output columns the next round
+    reads (default: all)."""
+    spark = state.sparkSession
+    for _ in range(rounds):
+        new = step(state) if callable(step) else spark.sql(step, state=state, **tables)
+        new = cut(new, eager=probe is None)
+        done = probe is not None and probe(state, new)
+        state = new.select(*carry) if carry else new
+        if done:
+            return state
+    if probe is not None:
+        raise RuntimeError(f"{name} did not converge in {rounds} rounds")
+    return state
+
+
+def _repeats(signal, last):
+    """A :func:`_supersteps` probe: converged once ``signal(new)``
+    equals the previous round's signal (``last`` before round 1). The
+    signal is carried, so no round re-reads the previous state."""
+
+    def probe(old, new):
+        nonlocal last
+        prev, last = last, signal(new)
+        return last == prev
+
+    return probe
+
+
+def _same_rows(a: DataFrame, b: DataFrame) -> bool:
+    """Multiset equality as one job: a two-sided ``exceptAll``."""
+    diff = a.exceptAll(b).limit(1).unionAll(b.exceptAll(a).limit(1)).limit(1)
+    return diff.count() == 0
+
+
 def connected_components(
     vertices: DataFrame, edges: DataFrame, *, max_iters: int = 20
 ) -> DataFrame:
@@ -92,79 +144,43 @@ def connected_components(
     Returns (id, component). Deterministic: labels are ids, min is total.
     Raises if the label propagation has not converged within
     ``max_iters`` — a silent partial result would be wrong for any graph
-    whose diameter exceeds the cap. (The O(log n)-round large-star/
-    small-star variant is the swap-in for web-scale diameters.)
+    whose diameter exceeds the cap. (:func:`connected_components_star`
+    needs O(log n) rounds instead of O(diameter).)
 
     Contract: ``vertices`` must cover every edge endpoint (both in-tree
     callers derive it that way); output rows are anchored on the vertex
     table.
     """
-    # LAZY checkpoints + a FULL-count convergence probe: the probe job
-    # is the single action per iteration — it materializes the round's
-    # checkpoint blocks as a side effect (a full count computes every
-    # partition, so no localCheckpoint block can be left unmaterialized
-    # — a limit(1) short-circuit would be unsafe here) and reads the
-    # convergence signal from the same pass.
-    #
     # CO-PARTITIONED round shape (guide §2.4 — establish the
-    # partitioning once, reuse it every round): both loop tables are
-    # hash-laid-out ONCE up front — sym by src (hashpartitioning(src)
-    # satisfies ClusteredDistribution([src, dst]), so the edge dedup
-    # runs partition-local behind the same single exchange) and labels
-    # by id. Each round then needs exactly ONE exchange (the
-    # neighbor-min aggregation re-keys src→dst); the sym⋈labels probe
-    # and the labels⟕nbr_min merge are both exchange-free because
-    # every operand already hashes on the join key, and checkpoints
-    # preserve the layout into the next round. The former union-agg
-    # shape re-exchanged sym per round AND paid a second old-vs-new
-    # join for the changed count; here the old label rides the merge
-    # row, so the convergence count folds into the round's only
-    # materializing action.
-    p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        _sym(edges)
-        .repartition(p, "src")
-        .dropDuplicates()
-        .localCheckpoint(eager=False)
+    # partitioning once, reuse it every round): sym hashes on src
+    # (which also satisfies the edge dedup's clustering) and labels on
+    # id, and cuts preserve the layout. Each round then needs exactly
+    # ONE exchange (the neighbor-min aggregation re-keys src→dst). The
+    # old label rides the merge row, so the changed-label count — the
+    # round's one action — needs no second old-vs-new join.
+    p = _parts(vertices)
+    sym = cut(_sym(edges).repartition(p, "src").dropDuplicates(), eager=False)
+    labels = cut(
+        vertices.select("id", F.col("id").alias("component")).repartition(p, "id"),
+        eager=False,
     )
-    labels = (
-        vertices.select("id", F.col("id").alias("component"))
-        .repartition(p, "id")
-        .localCheckpoint(eager=False)
+    return _supersteps(
+        "connected_components",
+        labels,
+        """
+        SELECT l.id, l.component AS __old,
+               least(l.component, coalesce(m.__nbr, l.component)) AS component
+        FROM {state} l LEFT JOIN (
+          SELECT s.dst AS id, min(l2.component) AS __nbr
+          FROM {sym} s JOIN {state} l2 ON s.src = l2.id
+          GROUP BY s.dst
+        ) m ON l.id = m.id
+        """,
+        rounds=max_iters,
+        probe=lambda old, new: new.filter(F.col("component") != F.col("__old")).count() == 0,
+        carry=("id", "component"),
+        sym=sym,
     )
-    changed = -1
-    spark = vertices.sparkSession
-    for _ in range(max_iters):
-        # candidate = min(own label, min over neighbors' labels). The
-        # whole round body is ONE templated spark.sql call: the
-        # DataFrame-API form (join → groupBy/agg → join → select) ran
-        # eager analysis on every intermediate, and ~70% of a round's
-        # wall at bench scale was that driver-side planning, not the
-        # count job (measured r13: round construction 0.31-0.53 s vs
-        # 0.11 s execution). Identical logical plan, one analysis.
-        step = spark.sql(
-            """
-            SELECT l.id, l.component AS __old,
-                   least(l.component, coalesce(m.__nbr, l.component)) AS component
-            FROM {labels} l LEFT JOIN (
-              SELECT s.dst AS id, min(l2.component) AS __nbr
-              FROM {sym} s JOIN {labels} l2 ON s.src = l2.id
-              GROUP BY s.dst
-            ) m ON l.id = m.id
-            """,
-            labels=labels,
-            sym=sym,
-        ).localCheckpoint(eager=False)
-        changed = step.filter(F.col("component") != F.col("__old")).count()
-        labels = step.select("id", "component")
-        if changed == 0:
-            break
-    if changed != 0:
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} iterations; "
-            "raise max_iters (diameter exceeds cap)"
-        )
-    return labels
 
 
 def label_propagation(
@@ -188,48 +204,46 @@ def label_propagation(
     join-aggregate skeleton as PageRank, lineage-cut per round.
     Isolated vertices keep their own label.
     """
-    # Co-partitioned loop layout (guide §2.4, the connected_components
-    # shape): sym hash(dst) — the vote probe's join key — and labels
-    # hash(id), both established once (hash(dst) also satisfies the
-    # edge dedup's (src, dst) clustering). Per round the probe join and
-    # the winners merge are exchange-free; the single exchange is the
-    # vote repartition to hash(src), behind which the (src, label)
-    # count, the per-id window and the arg-max all run partition-local.
-    p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    sym = (
-        _sym(edges).repartition(p, "dst").dropDuplicates().localCheckpoint(eager=True)
+    # Co-partitioned loop layout (the connected_components shape): sym
+    # hash(dst) — the vote probe's join key — and labels hash(id). Per
+    # round the single exchange is the vote repartition to hash(src)
+    # (the REPARTITION hint), behind which the (src, label) count, the
+    # per-id window and the arg-max all run partition-local.
+    p = _parts(vertices)
+    sym = cut(_sym(edges).repartition(p, "dst").dropDuplicates(), eager=True)
+    labels = cut(
+        vertices.select("id", F.col("id").alias("label")).repartition(p, "id"),
+        eager=True,
     )
-    labels = (
-        vertices.select("id", F.col("id").alias("label"))
-        .repartition(p, "id")
-        .localCheckpoint(eager=True)
+    return _supersteps(
+        "label_propagation",
+        labels,
+        f"""
+        SELECT l.id, coalesce(w.label, l.label) AS label
+        FROM {{state}} l LEFT JOIN (
+          SELECT id, label FROM (
+            SELECT id, label,
+                   row_number() OVER (PARTITION BY id
+                                      ORDER BY c DESC, label ASC) AS __rn
+            FROM (
+              SELECT src AS id, label, count(*) AS c FROM (
+                SELECT /*+ REPARTITION({p}, src) */ s.src, l2.label
+                FROM {{sym}} s JOIN {{state}} l2 ON s.dst = l2.id
+              ) GROUP BY src, label
+            )
+          ) WHERE __rn = 1
+        ) w ON l.id = w.id
+        """,
+        rounds=iters,
+        sym=sym,
     )
-    # One templated SQL statement per round (same driver-cost cut as
-    # the CC/PageRank rounds, r13): identical plan — the REPARTITION
-    # hint reproduces the pre-aggregation hash(src) layout behind which
-    # the vote count and the arg-max window run partition-local.
-    for _ in range(iters):
-        labels = labels.sparkSession.sql(
-            f"""
-            SELECT l.id, coalesce(w.label, l.label) AS label
-            FROM {{labels}} l LEFT JOIN (
-              SELECT id, label FROM (
-                SELECT id, label,
-                       row_number() OVER (PARTITION BY id
-                                          ORDER BY c DESC, label ASC) AS __rn
-                FROM (
-                  SELECT src AS id, label, count(*) AS c FROM (
-                    SELECT /*+ REPARTITION({p}, src) */ s.src, l2.label
-                    FROM {{sym}} s JOIN {{labels}} l2 ON s.dst = l2.id
-                  ) GROUP BY src, label
-                )
-              ) WHERE __rn = 1
-            ) w ON l.id = w.id
-            """,
-            labels=labels,
-            sym=sym,
-        ).localCheckpoint(eager=True)
-    return labels
+
+
+_HITS_AUTHORITY = """
+    SELECT e.dst AS id, sum(h.hub) AS authority
+    FROM {e} e JOIN {state} h ON e.src = h.id
+    GROUP BY e.dst
+"""
 
 
 def hits(
@@ -247,21 +261,18 @@ def hits(
     round keyed on vertex id (the same join-aggregate skeleton as
     PageRank), lineage-cut per round; isolated vertices carry 0s.
     """
-    e = edges.select("src", "dst").localCheckpoint(eager=True)
+    e = cut(edges.select("src", "dst"), eager=True)
+    hub_round = f"""
+        SELECT e.src AS id, sum(a.authority) AS hub
+        FROM {{e}} e JOIN ({_HITS_AUTHORITY}) a ON e.dst = a.id
+        GROUP BY e.src
+    """
     h = vertices.select("id", F.lit(1).cast("bigint").alias("hub"))
-    a = None
-    for _ in range(iters):
-        a = (
-            e.join(h.withColumnRenamed("id", "src"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("hub").alias("authority"))
-        )
-        h = (
-            e.join(a.withColumnRenamed("id", "dst"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum("authority").alias("hub"))
-        ).localCheckpoint(eager=True)
-    out = (
+    h = _supersteps("hits", h, hub_round, rounds=iters - 1, e=e)
+    # the output's authorities are the last round's, read from h_{iters-1}
+    a = vertices.sparkSession.sql(_HITS_AUTHORITY, e=e, state=h)
+    h = _supersteps("hits", h, hub_round, rounds=1, e=e)
+    return (
         vertices.select("id")
         .join(h, "id", "left")
         .join(a, "id", "left")
@@ -271,7 +282,6 @@ def hits(
             F.coalesce("authority", F.lit(0)).cast("bigint").alias("authority"),
         )
     )
-    return out
 
 
 def k_core(
@@ -294,48 +304,33 @@ def k_core(
     edges/self-loops are removed up front (degree = distinct
     neighbors).
     """
-    e = (
+    e = cut(
         edges.select(
             F.least("src", "dst").alias("u"), F.greatest("src", "dst").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        eager=True,
     )
-    n_rounds = rounds if rounds is not None else max_iters
-    converged = rounds is not None  # fixed-round mode needs no fixpoint
-    prev_cnt = e.count() if rounds is None else None
-    spark = edges.sparkSession
-    for _ in range(n_rounds):
-        # One templated SQL statement per peel round (r13 driver-cost
-        # cut; identical plan) and the previous edge count carried in a
-        # variable instead of re-counting the materialized checkpoint.
-        e2 = spark.sql(
-            f"""
-            WITH deg AS (
-              SELECT id, count(*) AS degree FROM (
-                SELECT u AS id FROM {{e}} UNION ALL SELECT v AS id FROM {{e}}
-              ) GROUP BY id
-            ),
-            keep AS (SELECT id FROM deg WHERE degree >= {int(k)})
-            SELECT u, v FROM {{e}} e
-            LEFT SEMI JOIN keep k1 ON e.u = k1.id
-            LEFT SEMI JOIN keep k2 ON e.v = k2.id
-            """,
-            e=e,
-        ).localCheckpoint(eager=True)
-        if rounds is None:
-            new_cnt = e2.count()
-            if new_cnt == prev_cnt:
-                e = e2
-                converged = True
-                break
-            prev_cnt = new_cnt
-        e = e2
-    if not converged:
-        raise RuntimeError(
-            f"k_core did not reach a fixpoint in {max_iters} rounds; raise max_iters"
-        )
+    # the fixpoint is reached when a round peels no edge
+    probe = _repeats(lambda df: df.count(), e.count()) if rounds is None else None
+    e = _supersteps(
+        "k_core",
+        e,
+        f"""
+        WITH deg AS (
+          SELECT id, count(*) AS degree FROM (
+            SELECT u AS id FROM {{state}} UNION ALL SELECT v AS id FROM {{state}}
+          ) GROUP BY id
+        ),
+        keep AS (SELECT id FROM deg WHERE degree >= {int(k)})
+        SELECT u, v FROM {{state}} e
+        LEFT SEMI JOIN keep k1 ON e.u = k1.id
+        LEFT SEMI JOIN keep k2 ON e.v = k2.id
+        """,
+        rounds=max_iters if rounds is None else rounds,
+        probe=probe,
+    )
     return (
         e.select(F.col("u").alias("id"))
         .unionAll(e.select(F.col("v").alias("id")))
@@ -344,45 +339,84 @@ def k_core(
     )
 
 
-def _pagerank_round(
+def _pagerank_loop(
     vertices: DataFrame,
     edges: DataFrame,
-    ranks: DataFrame,
-    out_tab: DataFrame,
     *,
+    iters: int,
+    init,
+    out_agg,
     contrib_sql: str,
-    dangling_sql: str,
-    update_sql: str,
+    update,
+    dangling_sql: str = "CAST(coalesce(sum(r2.rank), 0) AS LONG)",
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
-    """One PageRank-family round as a single templated spark.sql call.
+    """The PageRank family's shared loop; returns (id, rank).
 
-    The DataFrame-API round (2 joins + agg + anti-join agg + cross join
-    + select) eagerly analyzed ~12 intermediates per iteration; fusing
-    the round into one SQL statement keeps the identical logical plan
-    (verified: same exchanges, broadcast hint preserved) at one analysis
-    pass — the same driver-cost cut measured for the CC round (r13).
-    Aliases available to the fragments: e/r/o (contribution subquery),
-    r2/o2 (dangling subquery), v/c/dg (update row)."""
-    return vertices.sparkSession.sql(
+    ``init`` is the initial rank column, ``out_agg`` the per-source
+    out-degree (or out-weight) aggregate, and the SQL fragments fill
+    one round: ``contrib_sql`` per edge (aliases e/r/o), ``dangling_sql``
+    over the ranks of sinks (r2), ``update(n)`` per vertex (v/c/dg),
+    where ``n`` is the number of teleport targets — every vertex, or
+    with ``seeds`` the distinct seed ids that are vertices (flagged
+    ``v.__seed``).
+
+    The loop invariants are pinned once: vertices, edges and the
+    out-degree table sit in EVERY round's plan, so without the pins
+    each round re-runs the caller's graph-build lineage. The n-count
+    materialises the vertex pin and the out-degree count both the edge
+    pin (its input) and itself. Layout (guide §2.4): edges hash on src,
+    vertices/ranks on id, preserved by every round's cut — the
+    edges⋈ranks probe, the out-degree join, the dangling anti-join and
+    the vertices⟕contribs merge are exchange-free; the one per-round
+    exchange is the contribution aggregation re-keying src→dst.
+    Dangling mass stays in the plan as a 1-row broadcast (no driver
+    collect): one job per round."""
+    p = _parts(vertices)
+    v = vertices.repartition(p, "id")
+    if seeds is not None:
+        flags = seeds.select("id").distinct().withColumn("__seed", F.lit(True))
+        v = v.join(F.broadcast(flags), "id", "left")
+    v = cut(v, eager=False)
+    n = (v if seeds is None else v.filter(F.col("__seed"))).count()
+    if seeds is not None and n == 0:
+        raise ValueError("personalized_pagerank_fixed needs a seed that is a vertex")
+    edges = cut(edges.repartition(p, "src"), eager=False)
+    out = cut(edges.groupBy("src").agg(out_agg), eager=False)
+    out.count()
+    ranks = cut(v.select("id", init.alias("rank")), eager=True)
+    return _supersteps(
+        "pagerank",
+        ranks,
         f"""
-        SELECT /*+ BROADCAST(dg) */ v.id, {update_sql} AS rank
-        FROM {{vertices}} v
+        SELECT /*+ BROADCAST(dg) */ v.id, {update(n)} AS rank
+        FROM {{v}} v
         LEFT JOIN (
           SELECT e.dst AS id, sum({contrib_sql}) AS in_sum
-          FROM {{edges}} e JOIN {{ranks}} r ON e.src = r.id
-          JOIN {{out_tab}} o ON e.src = o.src
+          FROM {{e}} e JOIN {{state}} r ON e.src = r.id
+          JOIN {{out}} o ON e.src = o.src
           GROUP BY e.dst
         ) c ON v.id = c.id
         CROSS JOIN (
           SELECT {dangling_sql} AS __dangling
-          FROM {{ranks}} r2 LEFT ANTI JOIN {{out_tab}} o2 ON r2.id = o2.src
+          FROM {{state}} r2 LEFT ANTI JOIN {{out}} o2 ON r2.id = o2.src
         ) dg
         """,
-        vertices=vertices,
-        edges=edges,
-        ranks=ranks,
-        out_tab=out_tab,
-    ).localCheckpoint(eager=True)
+        rounds=iters,
+        v=v,
+        e=edges,
+        out=out,
+    )
+
+
+def _fixed_update(damping_pct: int, scale: int):
+    """The fixed-point update: base + (d * (in_sum + dangling div n)) div 100."""
+    base = (100 - damping_pct) * scale // 100
+    return lambda n: (
+        f"CAST({base} + (({damping_pct} * "
+        f"(coalesce(c.in_sum, cast(0 as long))"
+        f" + (dg.__dangling div {n}))) div 100) AS LONG)"
+    )
 
 
 def pagerank(
@@ -397,50 +431,19 @@ def pagerank(
     Dangling mass is redistributed uniformly each round so ranks sum to
     |V| (GraphX convention is un-normalized; we normalize to sum=|V|).
     """
-    # Pin the loop invariants once: vertices, edges and out_deg sit in
-    # EVERY iteration's plan, so without truncation each round re-runs
-    # the caller's full graph-build lineage (vertices 1x, edges 1x,
-    # out_deg 2x per round). The vertices pin is materialized by the
-    # n-count it already pays; the out_deg count materializes both the
-    # edges pin (its input) and itself in one job.
-    #
-    # CO-PARTITIONED layout (guide §2.4, same shape as
-    # connected_components): edges hash on src, vertices/ranks hash on
-    # id, established ONCE at pin time and preserved by every round's
-    # checkpoint — the edges⋈ranks probe, the out_deg join (and its
-    # aggregation, which runs exchange-free behind the src layout), the
-    # dangling anti-join and the vertices⟕contribs merge are then all
-    # exchange-free; the only per-round exchange is the contribution
-    # aggregation re-keying src→dst.
-    p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    vertices = vertices.repartition(p, "id").localCheckpoint(eager=False)
-    n = vertices.count()
-    edges = edges.repartition(p, "src").localCheckpoint(eager=False)
-    out_deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("out_deg"))
-        .localCheckpoint(eager=False)
+    return _pagerank_loop(
+        vertices,
+        edges,
+        iters=iters,
+        init=F.lit(1.0),
+        out_agg=F.count("*").alias("out_deg"),
+        contrib_sql="r.rank / o.out_deg",
+        dangling_sql="coalesce(sum(r2.rank), 0.0D)",
+        update=lambda n: (
+            f"{1.0 - damping!r}D + {damping!r}D * "
+            f"(coalesce(c.in_sum, 0.0D) + dg.__dangling / {float(n)!r}D)"
+        ),
     )
-    out_deg.count()
-    ranks = vertices.select("id", F.lit(1.0).alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
-    # Dangling mass stays in the plan: a 1-row aggregate broadcast into
-    # the update — no driver collect, one job per iteration. The round
-    # itself is one templated SQL statement (see _pagerank_round).
-    for _ in range(iters):
-        ranks = _pagerank_round(
-            vertices,
-            edges,
-            ranks,
-            out_deg,
-            contrib_sql="r.rank / o.out_deg",
-            dangling_sql="coalesce(sum(r2.rank), 0.0D)",
-            update_sql=(
-                f"{1.0 - damping!r}D + {damping!r}D * "
-                f"(coalesce(c.in_sum, 0.0D) + dg.__dangling / {float(n)!r}D)"
-            ),
-        )
-    return ranks
 
 
 def pagerank_fixed(
@@ -467,36 +470,15 @@ def pagerank_fixed(
     Integer headroom: ranks stay O(scale·n/|dangling-free|); with
     scale=1e6 the 64-bit budget holds past 10^9 vertices.
     """
-    # Loop-invariant pins + co-partitioned layout — same rationale as
-    # :func:`pagerank` (edges hash(src), vertices/ranks hash(id); the
-    # only per-round exchange is the src→dst contribution aggregation).
-    p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    vertices = vertices.repartition(p, "id").localCheckpoint(eager=False)
-    n = vertices.count()
-    base = (100 - damping_pct) * scale // 100
-    edges = edges.repartition(p, "src").localCheckpoint(eager=False)
-    out_deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("out_deg"))
-        .localCheckpoint(eager=False)
+    ranks = _pagerank_loop(
+        vertices,
+        edges,
+        iters=iters,
+        init=F.lit(scale).cast("long"),
+        out_agg=F.count("*").alias("out_deg"),
+        contrib_sql="r.rank div o.out_deg",
+        update=_fixed_update(damping_pct, scale),
     )
-    out_deg.count()
-    ranks = vertices.select("id", F.lit(scale).cast("long").alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
-    for _ in range(iters):
-        ranks = _pagerank_round(
-            vertices,
-            edges,
-            ranks,
-            out_deg,
-            contrib_sql="r.rank div o.out_deg",
-            dangling_sql="CAST(coalesce(sum(r2.rank), 0) AS LONG)",
-            update_sql=(
-                f"CAST({base} + (({damping_pct} * "
-                f"(coalesce(c.in_sum, cast(0 as long))"
-                f" + (dg.__dangling div {n}))) div 100) AS LONG)"
-            ),
-        )
     return ranks.select("id", F.col("rank").alias("rank_micros"))
 
 
@@ -518,35 +500,15 @@ def pagerank_weighted_fixed(
     ``(rank * w) div out_w`` floor contributions, dangling mass as a
     1-row broadcast, one shuffle per iteration. Headroom: rank ≤
     n·scale, so rank·w stays in int64 while n·scale·w_max < 2^63."""
-    # Loop-invariant pins + co-partitioned layout — same rationale as
-    # :func:`pagerank`.
-    p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    vertices = vertices.repartition(p, "id").localCheckpoint(eager=False)
-    n = vertices.count()
-    base = (100 - damping_pct) * scale // 100
-    edges = edges.repartition(p, "src").localCheckpoint(eager=False)
-    out_w = (
-        edges.groupBy("src")
-        .agg(F.sum("w").cast("long").alias("out_w"))
-        .localCheckpoint(eager=False)
+    ranks = _pagerank_loop(
+        vertices,
+        edges,
+        iters=iters,
+        init=F.lit(scale).cast("long"),
+        out_agg=F.sum("w").cast("long").alias("out_w"),
+        contrib_sql="(r.rank * e.w) div o.out_w",
+        update=_fixed_update(damping_pct, scale),
     )
-    out_w.count()
-    ranks = vertices.select("id", F.lit(scale).cast("long").alias("rank"))
-    ranks = ranks.localCheckpoint(eager=True)
-    for _ in range(iters):
-        ranks = _pagerank_round(
-            vertices,
-            edges,
-            ranks,
-            out_w,
-            contrib_sql="(r.rank * e.w) div o.out_w",
-            dangling_sql="CAST(coalesce(sum(r2.rank), 0) AS LONG)",
-            update_sql=(
-                f"CAST({base} + (({damping_pct} * "
-                f"(coalesce(c.in_sum, cast(0 as long))"
-                f" + (dg.__dangling div {n}))) div 100) AS LONG)"
-            ),
-        )
     return ranks.select("id", F.col("rank").alias("rank_micros"))
 
 
@@ -564,59 +526,47 @@ def transitive_closure(
     duplicate-path explosion is pruned every round, which is what keeps
     doubling viable on DAGs. Cycles would fixpoint (dist stops
     shrinking) but cost O(n·cycle) pairs; intended for hierarchies.
-    Raises if ``max_depth`` rounds don't close (no silent partials).
+    The closure is complete when a round adds no pair, which takes at
+    most ⌈log2 max_depth⌉ + 1 rounds on a graph whose shortest paths
+    are ≤ ``max_depth`` hops; raises otherwise (no silent partials).
 
     ``max_pairs`` is the dense-graph circuit breaker (round-2 ADVICE):
     the closure of a dense/cyclic graph is O(n·reach) pairs, and on a
     graph that isn't hierarchy-shaped that explodes long before the
-    doubling budget trips. Each round already materializes + counts
-    the closure, so the guard is free; when the running pair count
-    exceeds it, raise predictably instead of melting the cluster.
+    doubling budget trips. Each round already counts the closure, so
+    the guard is free; when the running pair count exceeds it, raise
+    predictably instead of melting the cluster.
     See DEPLOY.md "Sizing the graph algorithms"."""
-    closure = edges.select("src", "dst", F.lit(1).alias("dist")).distinct()
-    closure = closure.localCheckpoint(eager=True)
-    prev_cnt = closure.count()
-    spark = edges.sparkSession
-    rounds = max(1, math.ceil(math.log2(max_depth)) if max_depth > 1 else 1)
-    for _ in range(rounds):
-        # One templated SQL statement per round (same driver-cost cut
-        # as the CC/PageRank rounds, r13) and the previous pair count
-        # carried in a variable instead of re-counting the (already
-        # materialized) previous checkpoint — one job per round.
-        new = spark.sql(
-            """
-            SELECT src, dst, min(dist) AS dist FROM (
-              SELECT src, dst, dist FROM {closure}
-              UNION ALL
-              SELECT a.src AS src, b.dst AS dst, a.dist + b.dist AS dist
-              FROM {closure} a JOIN {closure} b ON a.dst = b.src
-            ) GROUP BY src, dst
-            """,
-            closure=closure,
-        ).localCheckpoint(eager=True)
-        n_new = new.count()
-        if max_pairs is not None and n_new > max_pairs:
+
+    def pairs(closure: DataFrame) -> int:
+        n = closure.count()
+        if max_pairs is not None and n > max_pairs:
             raise RuntimeError(
-                f"transitive_closure pair count {n_new} exceeds "
+                f"transitive_closure pair count {n} exceeds "
                 f"max_pairs={max_pairs}: the graph is denser than a "
                 "hierarchy — use connected_components / pagerank-style "
                 "iteration instead, or raise the budget deliberately"
             )
-        if n_new == prev_cnt:
-            return new
-        closure, prev_cnt = new, n_new
-    # one more doubling must add nothing, else the depth bound was wrong
-    a, b = closure.alias("a"), closure.alias("b")
-    extra = (
-        a.join(b, F.col("a.dst") == F.col("b.src"))
-        .select(F.col("a.src").alias("src"), F.col("b.dst").alias("dst"))
-        .join(closure.select("src", "dst"), ["src", "dst"], "left_anti")
+        return n
+
+    closure = cut(
+        edges.select("src", "dst", F.lit(1).alias("dist")).distinct(), eager=True
     )
-    if extra.limit(1).count() > 0:
-        raise RuntimeError(
-            f"transitive_closure did not converge within max_depth={max_depth}"
-        )
-    return closure
+    rounds = max(1, math.ceil(math.log2(max_depth)) if max_depth > 1 else 1)
+    return _supersteps(
+        "transitive_closure",
+        closure,
+        """
+        SELECT src, dst, min(dist) AS dist FROM (
+          SELECT src, dst, dist FROM {state}
+          UNION ALL
+          SELECT a.src AS src, b.dst AS dst, a.dist + b.dist AS dist
+          FROM {state} a JOIN {state} b ON a.dst = b.src
+        ) GROUP BY src, dst
+        """,
+        rounds=rounds + 1,
+        probe=_repeats(pairs, closure.count()),
+    )
 
 
 def personalized_pagerank_fixed(
@@ -638,50 +588,28 @@ def personalized_pagerank_fixed(
     floor arithmetic, one shuffle per iteration, dangling mass as a
     1-row broadcast — with the restart differences: initial mass and
     the (1-d) base land ONLY on seeds, and dangling mass teleports back
-    to the seeds (split evenly), never uniformly. Bit-identical across
-    engines/partitionings, so an unrolled-CTE oracle can replay it.
+    to the seeds (split evenly over the distinct seed ids that are
+    vertices; duplicate or unknown seed ids change nothing), never
+    uniformly. Raises ``ValueError`` if no seed is a vertex.
+    Bit-identical across engines/partitionings, so an unrolled-CTE
+    oracle can replay it.
     """
-    s_n = seeds.count()
-    if s_n == 0:
-        raise ValueError("personalized_pagerank_fixed needs a non-empty seed set")
     base = (100 - damping_pct) * scale // 100
-    seed_flags = seeds.select("id").distinct().withColumn("__seed", F.lit(True))
-    # Loop-invariant pins + co-partitioned layout — same rationale as
-    # :func:`pagerank`. The v pin is materialized by the eager
-    # ranks-init checkpoint below; the broadcast join preserves the
-    # repartitioned vertex layout.
-    p = int(vertices.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    v = (
-        vertices.repartition(p, "id")
-        .join(F.broadcast(seed_flags), "id", "left")
-        .localCheckpoint(eager=False)
+    ranks = _pagerank_loop(
+        vertices,
+        edges,
+        iters=iters,
+        init=F.when(F.col("__seed"), F.lit(scale)).otherwise(F.lit(0)).cast("long"),
+        out_agg=F.count("*").alias("out_deg"),
+        contrib_sql="r.rank div o.out_deg",
+        update=lambda n: (
+            f"CAST((CASE WHEN v.__seed THEN {base} ELSE 0 END) + "
+            f"(({damping_pct} * (coalesce(c.in_sum, cast(0 as long))"
+            f" + (case when v.__seed then dg.__dangling div {n}"
+            f" else cast(0 as long) end))) div 100) AS LONG)"
+        ),
+        seeds=seeds,
     )
-    edges = edges.repartition(p, "src").localCheckpoint(eager=False)
-    out_deg = (
-        edges.groupBy("src")
-        .agg(F.count("*").alias("out_deg"))
-        .localCheckpoint(eager=False)
-    )
-    out_deg.count()
-    ranks = v.select(
-        "id",
-        F.when(F.col("__seed"), F.lit(scale)).otherwise(F.lit(0)).cast("long").alias("rank"),
-    ).localCheckpoint(eager=True)
-    for _ in range(iters):
-        ranks = _pagerank_round(
-            v,
-            edges,
-            ranks,
-            out_deg,
-            contrib_sql="r.rank div o.out_deg",
-            dangling_sql="CAST(coalesce(sum(r2.rank), 0) AS LONG)",
-            update_sql=(
-                f"CAST((CASE WHEN v.__seed THEN {base} ELSE 0 END) + "
-                f"(({damping_pct} * (coalesce(c.in_sum, cast(0 as long))"
-                f" + (case when v.__seed then dg.__dangling div {s_n}"
-                f" else cast(0 as long) end))) div 100) AS LONG)"
-            ),
-        )
     return ranks.select("id", F.col("rank").alias("rank_micros"))
 
 
@@ -769,74 +697,45 @@ def connected_components_star(
     construction. Labeling is identical (min id per component). Set
     ``local_finish_edges=0`` to force pure dataflow to the fixpoint.
     """
-    # LAZY checkpoint folded into the count action (the min-label CC
-    # shape): the count materializes the checkpoint blocks as a side
-    # effect, so edge prep is ONE job instead of two (eager checkpoint
-    # then a count over the cached blocks). A full count touches every
-    # partition, so no block is left unmaterialized.
-    e = (
+    # Lazy cut materialised by the count (one job, not two).
+    e = cut(
         edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=False)
+        .distinct(),
+        eager=False,
     )
     e_cnt = e.count()
 
-    def _finish_local(cur: DataFrame) -> DataFrame:
-        comp = _unionfind_labels([(r.u, r.v) for r in cur.collect()])
-        id_type = cur.schema["u"].dataType
+    def probe(old: DataFrame, new: DataFrame) -> bool:
+        # Cheap gate first: distinct edge SETS can't be equal if their
+        # counts differ, and early contraction rounds always shrink the
+        # set — the exact check only runs in count-stable rounds. Both
+        # sides read materialised cut blocks.
+        nonlocal e_cnt
+        prev, e_cnt = e_cnt, new.count()
+        return e_cnt <= local_finish_edges or (e_cnt == prev and _same_rows(new, old))
+
+    if e_cnt > local_finish_edges:
+        e = _supersteps(
+            "connected_components_star",
+            e,
+            lambda s: _small_star(_large_star(s)),
+            rounds=max_iters,
+            probe=probe,
+        )
+    if 0 < e_cnt <= local_finish_edges:
+        comp = _unionfind_labels([(r.u, r.v) for r in e.collect()])
+        id_type = e.schema["u"].dataType
         schema = T.StructType(
             [T.StructField("id", id_type), T.StructField("component", id_type)]
         )
-        labels_df = vertices.sparkSession.createDataFrame(
-            list(comp.items()), schema
+        labels = F.broadcast(vertices.sparkSession.createDataFrame(list(comp.items()), schema))
+    else:
+        # Fixpoint edges form stars (node → component root). Roots and
+        # isolated vertices label themselves.
+        labels = e.groupBy("u").agg(F.min("v").alias("component")).select(
+            F.col("u").alias("id"), "component"
         )
-        return (
-            vertices.join(F.broadcast(labels_df), "id", "left")
-            .select(
-                "id", F.coalesce("component", F.col("id")).alias("component")
-            )
-        )
-
-    converged = False
-    for _ in range(max_iters):
-        if 0 < e_cnt <= local_finish_edges:
-            return _finish_local(e)
-        if e_cnt == 0:
-            converged = True  # no edges — every vertex is a singleton
-            break
-        # Lazy checkpoint + the count as the round's single
-        # materializing action (one job per round instead of two).
-        new_e = _small_star(_large_star(e)).localCheckpoint(eager=False)
-        # Cheap gate first: distinct edge SETS can't be equal if their
-        # counts differ, and early contraction rounds always shrink the
-        # set — the exact (two-sided exceptAll) fixpoint check only
-        # runs in rounds where the count is stable. Same convergence
-        # point, ~one scan instead of three for most rounds. Both sides
-        # of the exceptAll read already-materialized checkpoint blocks
-        # (this round's count and last round's).
-        new_cnt = new_e.count()
-        same = False
-        if new_cnt == e_cnt:
-            diff = (
-                new_e.exceptAll(e).limit(1)
-                .unionAll(e.exceptAll(new_e).limit(1))
-                .limit(1)
-            )
-            same = diff.count() == 0
-        e, e_cnt = new_e, new_cnt
-        if same:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} rounds"
-        )
-    # Fixpoint edges form stars (node → component root). Roots and
-    # isolated vertices label themselves.
-    labels = e.groupBy("u").agg(F.min("v").alias("component")).select(
-        F.col("u").alias("id"), "component"
-    )
     return (
         vertices.join(labels, "id", "left")
         .select("id", F.coalesce("component", F.col("id")).alias("component"))
@@ -878,6 +777,20 @@ def strongly_connected_components(
     )
 
 
+def _labelled_edges(edges: DataFrame, membership: DataFrame):
+    """The membership as (id, com) and each edge labelled with both
+    endpoints' communities, (src, dst, cs, cd): the shared input of
+    :func:`modularity` and :func:`conductance`."""
+    mem = membership.select(F.col(membership.columns[0]).alias("id"),
+                            F.col(membership.columns[1]).alias("com"))
+    lab = (
+        edges.select("src", "dst")
+        .join(mem.withColumnRenamed("id", "src").withColumnRenamed("com", "cs"), "src")
+        .join(mem.withColumnRenamed("id", "dst").withColumnRenamed("com", "cd"), "dst")
+    )
+    return mem, lab
+
+
 def modularity(edges: DataFrame, membership: DataFrame) -> DataFrame:
     """Newman modularity Q of a node partition over an undirected
     simple graph: Q = intra/m − Σ_c (d_c / 2m)².
@@ -896,13 +809,7 @@ def modularity(edges: DataFrame, membership: DataFrame) -> DataFrame:
     no all-pairs, no windows; membership is a normal shuffled join
     (it is corpus-sized, not broadcastable).
     """
-    mem = membership.select(F.col(membership.columns[0]).alias("id"),
-                            F.col(membership.columns[1]).alias("com"))
-    lab = (
-        edges.select("src", "dst")
-        .join(mem.withColumnRenamed("id", "src").withColumnRenamed("com", "cs"), "src")
-        .join(mem.withColumnRenamed("id", "dst").withColumnRenamed("com", "cd"), "dst")
-    )
+    mem, lab = _labelled_edges(edges, membership)
     tot = lab.agg(
         F.count("*").alias("m"),
         F.sum(F.when(F.col("cs") == F.col("cd"), 1).otherwise(0)).alias("intra_edges"),
@@ -938,13 +845,7 @@ def conductance(edges: DataFrame, membership: DataFrame) -> DataFrame:
     Scale: the same two id-joins as modularity plus one union-explode
     count; no windows, no all-pairs.
     """
-    mem = membership.select(F.col(membership.columns[0]).alias("id"),
-                            F.col(membership.columns[1]).alias("com"))
-    lab = (
-        edges.select("src", "dst")
-        .join(mem.withColumnRenamed("id", "src").withColumnRenamed("com", "cs"), "src")
-        .join(mem.withColumnRenamed("id", "dst").withColumnRenamed("com", "cd"), "dst")
-    )
+    mem, lab = _labelled_edges(edges, membership)
     intra = (
         lab.filter(F.col("cs") == F.col("cd"))
         .groupBy(F.col("cs").alias("com"))
@@ -988,7 +889,8 @@ def weighted_sssp(
     (min-plus over bigints stays exact — no float accumulation order to
     worry about); ``sources`` is (id, landmark), so per-landmark
     distance maps come out of one run, GraphFrames-``shortestPaths``
-    style. Returns (id, landmark, dist) for REACHABLE pairs only.
+    style; repeated source rows count once. Returns (id, landmark, dist)
+    for REACHABLE pairs only.
 
     Each round is one equi-join + one min-aggregate, both hashed on the
     vertex id — O(longest-shortest-path) rounds, the same tradeoff as
@@ -998,74 +900,51 @@ def weighted_sssp(
     non-convergence raises instead of returning wrong distances —
     negative-weight cycles can never converge and are therefore
     surfaced, not silently looped over."""
-    # Pin the edge table once: it sits in every relaxation round's plan
-    # and the caller's edge lineage (unions, weight derivations) would
-    # otherwise re-run up to max_iters times. Lazy — round 1's action
-    # materializes it; a single consumer stage per round, so no
-    # concurrent-materialization race.
-    #
-    # CO-PARTITIONED layout (guide §2.4, the connected_components
-    # shape): edges hash(src), dist hash(id) — the relaxation probe is
-    # then exchange-free every round, the relaxed candidates take ONE
-    # repartition to hash(id) (which satisfies the (id, landmark)
-    # aggregation clustering, so the min-agg runs partition-local
+    # Co-partitioned layout (the connected_components shape): edges
+    # hash(src), dist hash(id) — the relaxation probe is exchange-free,
+    # the relaxed candidates take ONE repartition to hash(id) (the
+    # REPARTITION hint; the (id, landmark) min-agg runs partition-local
     # behind it), and the merge with the previous state is a
-    # co-partitioned full-outer join (identical rows to the former
-    # union+groupBy-min). The stats probe is the round's single
-    # materializing action (count+sum scans every partition of the
-    # lazy checkpoint).
-    p = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    e = (
-        edges.select("src", "dst", F.col("w").cast("bigint").alias("w"))
-        .repartition(p, "src")
-        .localCheckpoint(eager=False)
+    # co-partitioned full-outer join.
+    p = _parts(edges)
+    e = cut(
+        edges.select("src", "dst", F.col("w").cast("bigint").alias("w")).repartition(p, "src"),
+        eager=False,
     )
-    dist = (
-        sources.select("id", "landmark", F.lit(0).cast("bigint").alias("dist"))
+    # hash(id) also clusters (id, landmark): the source dedup runs
+    # partition-local behind the one exchange
+    dist = cut(
+        sources.select("id", "landmark")
         .repartition(p, "id")
-        .localCheckpoint(eager=False)
+        .dropDuplicates()
+        .withColumn("dist", F.lit(0).cast("bigint")),
+        eager=False,
     )
-    stats = dist.agg(F.count("*"), F.sum("dist")).first()
-    spark = edges.sparkSession
-    for _ in range(max_iters):
-        # One templated SQL statement per round (same driver-cost cut
-        # as the CC/PageRank rounds, r13): identical plan — the
-        # REPARTITION hint reproduces the hash(id) layout behind which
-        # the (id, landmark) min-agg runs partition-local.
-        new = spark.sql(
-            f"""
-            SELECT id, landmark,
-                   least(coalesce(o.dist, r.dist),
-                         coalesce(r.dist, o.dist)) AS dist
-            FROM {{dist}} o FULL OUTER JOIN (
-              SELECT id, landmark, min(dist) AS dist FROM (
-                SELECT /*+ REPARTITION({p}, id) */
-                       e.dst AS id, d.landmark, d.dist + e.w AS dist
-                FROM {{dist}} d JOIN {{edges}} e ON d.id = e.src
-              ) GROUP BY id, landmark
-            ) r USING (id, landmark)
-            """,
-            dist=dist,
-            edges=e,
-        ).localCheckpoint(eager=False)
-        # Cheap gate first (round-4 ADVICE: the two exceptAll probes
-        # cost ~two extra scans every round): the reachable pair set
-        # only GROWS and each pair's dist only DECREASES under min-plus
-        # relaxation, so the state can't be a fixpoint unless both the
-        # pair count and the total distance are unchanged — one
-        # aggregate per round. The exact two-sided exceptAll probe runs
-        # only in (count, sum)-stable rounds, which outside pathological
-        # sum collisions is the convergence round itself.
-        new_stats = new.agg(F.count("*"), F.sum("dist")).first()
-        same = False
-        if tuple(new_stats) == tuple(stats):
-            diff = (
-                new.exceptAll(dist).limit(1)
-                .unionAll(dist.exceptAll(new).limit(1))
-                .limit(1)
-            )
-            same = diff.count() == 0
-        dist, stats = new, new_stats
-        if same:
-            return dist
-    raise RuntimeError(f"weighted_sssp did not converge in {max_iters} rounds")
+
+    def stats(d: DataFrame) -> tuple:
+        return tuple(d.agg(F.count("*"), F.sum("dist")).first())
+
+    # Cheap gate first: the reachable pair set only GROWS and each
+    # pair's dist only DECREASES, so no fixpoint is possible unless the
+    # pair count and the distance total both repeat — one aggregate per
+    # round; the exact check runs only in (count, sum)-stable rounds.
+    stable = _repeats(stats, stats(dist))
+    return _supersteps(
+        "weighted_sssp",
+        dist,
+        f"""
+        SELECT id, landmark,
+               least(coalesce(o.dist, r.dist),
+                     coalesce(r.dist, o.dist)) AS dist
+        FROM {{state}} o FULL OUTER JOIN (
+          SELECT id, landmark, min(dist) AS dist FROM (
+            SELECT /*+ REPARTITION({p}, id) */
+                   e.dst AS id, d.landmark, d.dist + e.w AS dist
+            FROM {{state}} d JOIN {{edges}} e ON d.id = e.src
+          ) GROUP BY id, landmark
+        ) r USING (id, landmark)
+        """,
+        rounds=max_iters,
+        probe=lambda old, new: stable(old, new) and _same_rows(new, old),
+        edges=e,
+    )

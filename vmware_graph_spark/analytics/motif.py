@@ -3,13 +3,15 @@
 The Cypher-pattern analogs (SURVEY §2.11 graph algorithms): fixed-shape
 motifs compile to join chains (Catalyst reorders/broadcasts them);
 variable-length reachability is an iterative frontier expansion — one
-shuffle per hop, lineage cut per iteration.
+shuffle per hop, lineage cut per iteration (``operators.pin.cut``).
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from vmware_graph_spark.operators.pin import cut
 
 
 def two_hop_motif(
@@ -31,6 +33,55 @@ def two_hop_motif(
     return ab.join(bc, "b").select("a", "b", "c")
 
 
+def _frontier_bfs(
+    vertices: DataFrame,
+    edges: DataFrame,
+    start: DataFrame,
+    *,
+    max_hops: int,
+    directed: bool,
+) -> DataFrame:
+    """The frontier loop behind :func:`bfs_distances` and
+    :func:`shortest_paths`. ``start`` holds the distinct state keys at
+    distance 0 — ``id``, or ``(id, landmark)`` for per-landmark
+    distances; the result is (keys..., dist) over reached vertices.
+
+    Each hop is one templated SQL (the frontier's out-neighbours, minus
+    the visited set), one shuffle keyed on vertex id and one eager cut
+    of its result, which is the next frontier. ``visited`` is the
+    uncut union of the hop cuts: their lineage is already truncated,
+    so nothing recomputes, and a hop writes only the rows it found —
+    the hop that finds nothing writes nothing."""
+    keys = ", ".join(start.columns)
+    carried = "".join(f", f.{k}" for k in start.columns[1:])
+    e = edges.select("src", "dst")
+    if not directed:
+        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    e = cut(e.distinct(), eager=True)
+    visited = cut(start.withColumn("dist", F.lit(0)), eager=True)
+    frontier = visited
+    spark = vertices.sparkSession
+    for hop in range(1, max_hops + 1):
+        frontier = cut(
+            spark.sql(
+                f"""
+                SELECT {keys}, {hop} AS dist FROM (
+                  SELECT DISTINCT e.dst AS id{carried}
+                  FROM {{e}} e JOIN {{frontier}} f ON e.src = f.id
+                ) n LEFT ANTI JOIN {{visited}} v USING ({keys})
+                """,
+                e=e,
+                frontier=frontier,
+                visited=visited,
+            ),
+            eager=True,
+        )
+        if frontier.isEmpty():
+            break
+        visited = visited.unionByName(frontier)
+    return visited.join(vertices.select("id"), "id", "left_semi")
+
+
 def shortest_paths(
     vertices: DataFrame,
     edges: DataFrame,
@@ -48,46 +99,11 @@ def shortest_paths(
     GraphFrames' per-vertex map column: at 100 TB a map of |L| entries
     per vertex forces a wide row and defeats column pruning, while rows
     shuffle-partition evenly and unreachable pairs cost nothing. State
-    is the per-(vertex, landmark) visited set; each hop is one shuffle
-    keyed on vertex id, lineage cut per hop (same frontier discipline
-    as ``bfs_distances``).
+    is the per-(vertex, landmark) visited set, expanded by the same
+    frontier loop as ``bfs_distances``.
     """
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.distinct().localCheckpoint(eager=True)
-
-    visited = (
-        landmarks.select("id")
-        .distinct()
-        .select("id", F.col("id").alias("landmark"))
-        .withColumn("dist", F.lit(0))
-        .localCheckpoint(eager=True)
-    )
-    frontier = visited
-    spark = vertices.sparkSession
-    for hop in range(1, max_hops + 1):
-        # One templated SQL per hop, and ONE materialization per hop:
-        # nxt stays lazy inside the union's eager checkpoint (it used to
-        # be checkpointed separately — two full writes of the frontier),
-        # and the next frontier is a filter over the new checkpoint's
-        # blocks, so nothing recomputes (r13 driver/job-cost cut).
-        nxt = spark.sql(
-            f"""
-            SELECT id, landmark, {hop} AS dist FROM (
-              SELECT DISTINCT e.dst AS id, f.landmark
-              FROM {{e}} e JOIN {{frontier}} f ON e.src = f.id
-            ) n LEFT ANTI JOIN {{visited}} v USING (id, landmark)
-            """,
-            e=e,
-            frontier=frontier,
-            visited=visited,
-        )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = visited.filter(F.col("dist") == hop)
-        if frontier.isEmpty():
-            break
-    return visited.join(vertices.select("id"), "id", "left_semi")
+    start = landmarks.select("id").distinct().select("id", F.col("id").alias("landmark"))
+    return _frontier_bfs(vertices, edges, start, max_hops=max_hops, directed=directed)
 
 
 def bfs_distances(
@@ -104,36 +120,8 @@ def bfs_distances(
     hop is one shuffle on vertex id, lineage cut per hop. Unreached
     vertices are omitted (Cypher path-match semantics, not ∞ rows).
     """
-    e = edges.select("src", "dst")
-    if not directed:
-        e = e.unionByName(e.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-    e = e.distinct().localCheckpoint(eager=True)
-
-    visited = (
-        sources.select("id").distinct().withColumn("dist", F.lit(0)).localCheckpoint(eager=True)
-    )
-    frontier = visited
-    spark = vertices.sparkSession
-    for hop in range(1, max_hops + 1):
-        # Same shape as shortest_paths: one SQL per hop, one
-        # materialization per hop (nxt lazy inside the union
-        # checkpoint; next frontier filters the checkpoint blocks).
-        nxt = spark.sql(
-            f"""
-            SELECT id, {hop} AS dist FROM (
-              SELECT DISTINCT e.dst AS id
-              FROM {{e}} e JOIN {{frontier}} f ON e.src = f.id
-            ) n LEFT ANTI JOIN {{visited}} v USING (id)
-            """,
-            e=e,
-            frontier=frontier,
-            visited=visited,
-        )
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = visited.filter(F.col("dist") == hop)
-        if frontier.isEmpty():
-            break
-    return visited.join(vertices.select("id"), "id", "left_semi")
+    start = sources.select("id").distinct()
+    return _frontier_bfs(vertices, edges, start, max_hops=max_hops, directed=directed)
 
 
 # ---------------------------------------------------------------------------

@@ -31,11 +31,9 @@ immutable inputs). In-tree callers all qualify:
 DISK_ONLY rather than MEMORY_*: pinned frames here are bounded but not
 tiny (≤ √(2·token mass) histogram rows; batch-sized dedup derivations),
 and a disk read is still ~100× cheaper than re-running the corpus-wide
-explode/groupBy that produced them. Iterative per-round truncation
-(analytics/algos) keeps localCheckpoint: there the lineage CHAIN is the
-problem (it grows per iteration until analysis dominates), recompute
-from the full chain is exactly what must never happen, and on a cluster
-those call sites document reliable ``checkpoint()`` as the swap-in.
+explode/groupBy that produced them. Lineage TRUNCATION (iterative
+rounds, GraphStore tables, fixture sheets) is the other primitive,
+:func:`cut`: there the lineage chain itself is the problem.
 """
 
 from __future__ import annotations
@@ -108,26 +106,24 @@ def pinned_lazy(df: DataFrame) -> DataFrame:
     return _register(df.persist(StorageLevel.DISK_ONLY))
 
 
-def iterpin(df: DataFrame) -> DataFrame:
-    """Per-round lineage TRUNCATION for iterative algorithms (k-truss,
-    CC, PageRank-style loops): ``localCheckpoint(eager=True)``. Here
-    the growing lineage CHAIN is the problem — analysis cost compounds
-    per round and a recompute from the full chain is exactly what must
-    never happen — so truncation is intended, not an oversight.
-    Cluster deployment note (same contract as analytics/algos.py):
-    localCheckpoint blocks live on executors and are lost with them; on
-    a multi-executor cluster swap this body for reliable
-    ``df.checkpoint()`` with ``spark.sparkContext.setCheckpointDir`` on
-    shared storage — identical semantics, failure-safe blocks."""
-    return df.localCheckpoint(eager=True)
+def cut(df: DataFrame, *, eager: bool) -> DataFrame:
+    """Cut ``df``'s lineage: the package's one lineage-cut primitive.
 
+    Used where the lineage chain itself is the problem — iterative
+    rounds (each round's plan would embed every prior round, so
+    analysis cost compounds and a recompute from the chain must never
+    happen), the ``GraphStore`` label and edge tables, the fixture
+    sheets. ``eager=True`` materialises now; ``eager=False`` lets the
+    first action over the result materialise it (a full count does so
+    in the same job; under AQE the upstream shuffle stages still run
+    when the cut is taken).
 
-def iterpin_lazy(df: DataFrame) -> DataFrame:
-    """Lazy variant of :func:`iterpin` for iterative loops whose round
-    output is consumed exactly once by the next round's plan build
-    (PQ codebook refinement, NN-Descent rounds): lineage TRUNCATION is
-    the point — without it each round's plan embeds every prior
-    round — but deferring materialization keeps the whole loop one job
-    chain. Same cluster note as iterpin: swap for reliable
-    ``df.checkpoint()`` on shared storage off-box."""
-    return df.localCheckpoint(eager=False)
+    Local vs reliable: this is ``localCheckpoint``, whose blocks live
+    on the executors and are lost with them — after an executor loss
+    every job over the cut fails, since no lineage is left to
+    recompute from. On a cluster with dynamic executors, make this
+    body ``df.checkpoint(eager)`` with
+    ``spark.sparkContext.setCheckpointDir`` on shared storage: the same
+    semantics with failure-safe blocks. Every cut in the package goes
+    through here, so that is a one-function change."""
+    return df.localCheckpoint(eager=eager)

@@ -22,7 +22,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from vmware_graph_spark.functions.vector import as_double_vec, cosine, dot
-from vmware_graph_spark.operators.pin import iterpin_lazy
+from vmware_graph_spark.operators.pin import cut
 
 
 def _score(queries: DataFrame, candidates: DataFrame, id_col: str, vec_col: str) -> DataFrame:
@@ -205,7 +205,7 @@ def pq_codebook(
     )
     cb = _pq_centroids(x, assign, sublen)
     for _ in range(max(0, iters - 1)):
-        cb = _pq_centroids(x, _pq_assign(x, cb), sublen).transform(iterpin_lazy)
+        cb = cut(_pq_centroids(x, _pq_assign(x, cb), sublen), eager=False)
     return cb
 
 
@@ -661,9 +661,10 @@ def knn_graph_nn_descent(
     # scoring (2 refs/round) — without truncation the caller's scan +
     # vector conversion re-runs for each reference. Lazy: the planes
     # count (or the first round's action) materializes it.
-    base = df.select(
-        F.col(id_col).alias("id"), as_double_vec(vec_col).alias("__v")
-    ).transform(iterpin_lazy)
+    base = cut(
+        df.select(F.col(id_col).alias("id"), as_double_vec(vec_col).alias("__v")),
+        eager=False,
+    )
     if planes is None:
         import math
 
@@ -683,7 +684,7 @@ def knn_graph_nn_descent(
         )
         cand = both if cand is None else cand.unionByName(both)
     cand = cand.distinct()
-    knn = _knn_topk(_knn_pair_score(cand, base), k).transform(iterpin_lazy)
+    knn = cut(_knn_topk(_knn_pair_score(cand, base), k), eager=False)
     for _ in range(iters):
         x, y = knn.alias("x"), knn.alias("y")
         nn2 = (
@@ -695,7 +696,7 @@ def knn_graph_nn_descent(
         cand = (
             knn.select("src", "dst").unionByName(rev).unionByName(nn2).distinct()
         )
-        knn = _knn_topk(_knn_pair_score(cand, base), k).transform(iterpin_lazy)
+        knn = cut(_knn_topk(_knn_pair_score(cand, base), k), eager=False)
     return knn.withColumn("cosine", F.round("cosine", 6))
 
 

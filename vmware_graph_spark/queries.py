@@ -62,6 +62,7 @@ from vmware_graph_spark.functions.sketch import (
     kmv_distinct,
 )
 from vmware_graph_spark.operators.merge import merge_edges, merge_nodes
+from vmware_graph_spark.operators.pin import cut
 from vmware_graph_spark.operators.similarity import cosine_topk, ivf_topk
 from vmware_graph_spark.operators.snapshot import snapshot_diff, sweep_edges
 from vmware_graph_spark.analytics.algos import connected_components, degrees, pagerank
@@ -1691,7 +1692,7 @@ def _sheet_fixture(fn):
     tables); every ingest branch that consumes one would otherwise
     replan the whole fixture subtree per upsert/edge batch —
     measured ~35% of stage-query wall time at sf0.1 is exactly that
-    repeated Catalyst analysis. ``localCheckpoint(eager=False)`` turns
+    repeated Catalyst analysis. ``cut(eager=False)`` turns
     the fixture into a flat LogicalRDD while keeping the refresh a
     single job chain. The REAL ingest path (workbook parquet sheets,
     ``sources/workbook.py``) is deliberately NOT cut: parquet scans are
@@ -1713,7 +1714,7 @@ def _sheet_fixture(fn):
             tuple(sorted(kw.items())),
         )
         if key not in _SHEET_CACHE:
-            _SHEET_CACHE[key] = fn(spark, sf_dir, **kw).localCheckpoint(eager=False)
+            _SHEET_CACHE[key] = cut(fn(spark, sf_dir, **kw), eager=False)
         return _SHEET_CACHE[key]
 
     return wrap

@@ -36,6 +36,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from vmware_graph_spark.operators.pin import cut
 from vmware_graph_spark.queries import query
 from vmware_graph_spark.sources.tables import load_table
 
@@ -558,7 +559,7 @@ def bpe_train_merges(spark, sf_dir):
     into the re-segmentation.
 
     Plan shape (round 12, honest per-invocation timing): the base
-    segmentation is localCheckpoint-pinned ONCE (the corpus explode +
+    segmentation is lineage-cut (``pin.cut``) ONCE (the corpus explode +
     vocab agg never re-derives — without the pin the final plan scanned
     the corpus 7x and ran the pair-explode 14x across the union
     branches), and each round is exactly one job: the pair aggregation
@@ -567,9 +568,7 @@ def bpe_train_merges(spark, sf_dir):
     An eager persist(DISK_ONLY)+count pin per winner was measured
     SLOWER honestly (2.1-2.8 s vs 1.48 s at sf0.1): its apparent win
     came from CacheManager block reuse across invocations, which the
-    bench no longer permits. Cluster note (same contract as
-    analytics/algos.py): swap localCheckpoint for reliable
-    ``checkpoint()`` on shared storage off-box."""
+    bench no longer permits. Cluster note: see ``pin.cut``."""
     d = load_table(spark, sf_dir, "documents")
     vocab = (
         d.select(
@@ -580,9 +579,12 @@ def bpe_train_merges(spark, sf_dir):
         .groupBy("token")
         .agg(F.count("*").cast("bigint").alias("f"))
     )
-    seg = vocab.withColumn(
-        "s", F.expr("' ' || trim(regexp_replace(token, '(.)', '$1 ')) || ' '")
-    ).localCheckpoint(eager=True)
+    seg = cut(
+        vocab.withColumn(
+            "s", F.expr("' ' || trim(regexp_replace(token, '(.)', '$1 ')) || ' '")
+        ),
+        eager=True,
+    )
 
     out_rows = []
     for r in range(1, _BPE_ROUNDS + 1):

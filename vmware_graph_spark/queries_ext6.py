@@ -34,6 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
+from vmware_graph_spark.operators.pin import cut
 from vmware_graph_spark.queries import query
 from vmware_graph_spark.sources.tables import load_table
 
@@ -164,11 +165,7 @@ def k_truss_part_cooccurrence(spark, sf_dir):
             .filter(F.col("sup") >= _TRUSS_K - 2)
             .select("a", "b")
         )
-        # iterative per-round truncation — same exemption class as
-        # analytics/algos.py; iterpin documents the cluster swap-in
-        from vmware_graph_spark.operators.pin import iterpin
-
-        e = iterpin(e)
+        e = cut(e, eager=True)
     final_sup = support(e)
     return (
         e.join(final_sup, ["a", "b"], "left")

@@ -35,6 +35,7 @@ from vmware_graph_spark.operators.merge import (
     merge_edges,
     merge_edges_with_props,
 )
+from vmware_graph_spark.operators.pin import cut
 
 # Unit separator joins composite natural keys into the edge-table key.
 US = "\x1f"
@@ -147,7 +148,7 @@ class GraphStore:
     """
 
     def __init__(self, spark: SparkSession, *, checkpoint: bool = True):
-        """``checkpoint=True`` cuts the lineage (``localCheckpoint``) of
+        """``checkpoint=True`` cuts the lineage (``pin.cut``) of
         each merged label table and edge table. Without the cuts the
         plan for a label after stage N embeds every prior stage, and
         the cut tables are shared subtrees of later stages' plans. Under
@@ -181,7 +182,7 @@ class GraphStore:
         self._shared_cuts: list[DataFrame] = []
 
     def _cut(self, df: DataFrame) -> DataFrame:
-        return df.localCheckpoint(eager=False) if self._checkpoint else df
+        return cut(df, eager=False) if self._checkpoint else df
 
     # -- vertices ----------------------------------------------------------
 
@@ -406,8 +407,8 @@ class GraphStore:
         # same shared subtree racily/redundantly (round-8 ADVICE #3).
         # These frames are small (distinct key pairs), so the count is
         # cheap; after it, every thread reads the checkpoint blocks.
-        for cut in self._shared_cuts:
-            cut.count()
+        for shared in self._shared_cuts:
+            shared.count()
         self._shared_cuts.clear()
 
         def _write_label(job):

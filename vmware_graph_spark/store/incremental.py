@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from vmware_graph_spark.operators.merge import upsert_last_writer_wins
+from vmware_graph_spark.operators.pin import cut
 
 
 class IncrementalTable:
@@ -118,7 +119,7 @@ class IncrementalTable:
         # Materialize before overwriting the path we just read
         # (parquet-on-path cannot overwrite its own input mid-plan; a
         # transactional table format replaces this with a commit).
-        merged = merged.localCheckpoint(eager=True)
+        merged = cut(merged, eager=True)
         n = merged.count()
         (
             merged.write.mode("overwrite")
